@@ -475,6 +475,14 @@ def main() -> None:
     only = os.environ.get("SPARK_GRAFT_BENCH_QUERIES")
     if only:
         wanted = {n.strip() for n in only.split(",") if n.strip()}
+        unknown = sorted(wanted - set(HEADLINE))
+        if unknown:
+            # fail before the idle wait and the JVM: a silently dropped
+            # name would print a "valid" run that timed nothing asked for
+            sys.exit(
+                "SPARK_GRAFT_BENCH_QUERIES names queries not in HEADLINE: "
+                + ", ".join(unknown)
+            )
         headline = [n for n in HEADLINE if n in wanted]
     # External-contention snapshot BEFORE the JVM exists: loadavg here
     # is other workloads only. Samples taken mid-run include the
@@ -604,8 +612,8 @@ def main() -> None:
         # covered by clearCache; Python gc detaches any cyclic py4j
         # refs, then a driver GC lets the ContextCleaner release the
         # dereferenced checkpoint/broadcast/shuffle state between
-        # passes (verified drains storage to 0:
-        # scripts/verify_pin_release.py)
+        # passes (verified drains storage to 0: NOTES.md "r9 end-state",
+        # `_pin release`)
         try:
             import gc as _gc
 

@@ -22,6 +22,7 @@ from pyspark.sql.window import Window
 
 from ..functions.hashing import MOD31 as MOD  # 31-bit hashes: ANSI-overflow-safe
 from ..functions.hashing import char_shingles, hashed, minhash_perm, word_shingles
+from .graphs import _free
 
 
 def spread(df: DataFrame, col: str) -> DataFrame:
@@ -57,20 +58,6 @@ def exact_dedup(docs: DataFrame, key: str = "text", id_col: str = "doc_id") -> D
 #: re-exports (public operator API; implementations in functions.hashing)
 shingles = word_shingles
 shingle_hashes = hashed
-
-
-def minhash_signature(hash_col: str, num_hashes: int = 32):
-    """MinHash signature over pre-hashed shingles as one array column
-    (array-form variant; the pipeline below uses the faster
-    explode+aggregate form). h_j(S) = min over hashes of
-    (a_j*h + b_j) mod M — deterministic across runs/partitions."""
-    mins = [
-        F.expr(f"array_min(transform({hash_col}, h -> {minhash_perm('h', j)}))").alias(
-            f"mh_{j}"
-        )
-        for j in range(num_hashes)
-    ]
-    return F.array(*mins)
 
 
 def _drop_mega_buckets(df: DataFrame, keys: list[str], max_bucket: int) -> DataFrame:
@@ -469,9 +456,7 @@ def connected_components(
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iter: int = 6,
-    early_stop: bool = True,
     stats: dict | None = None,
-    rounds_per_checkpoint: int = 1,
 ) -> DataFrame:
     """Cluster assignment over a near-dup pair graph: each node gets
     cluster = the minimum doc id reachable within `max_iter` hops —
@@ -484,7 +469,7 @@ def connected_components(
     never adjacency blowups. Near-dup graphs are SHALLOW (near-dups of
     a doc are near-dups of each other, so components are
     quasi-cliques); a small fixed max_iter converges in practice, and
-    `early_stop` exits as soon as the (strictly monotone) label sum
+    the loop exits as soon as the (strictly monotone) label sum
     stops decreasing — fixpoint detection for one cheap aggregate per
     round. For adversarially long chains use the log-doubling
     large-star/small-star variant (Kiveris et al.) — same join/agg
@@ -507,15 +492,6 @@ def connected_components(
     final labels' blocks survive (the returned DataFrame reads them);
     callers wanting a fully clean session can unpersist via the same
     analyzed-plan handle after materializing."""
-
-    def _free(ck: DataFrame) -> None:
-        # the checkpoint blocks belong to the LogicalRDD behind the
-        # checkpointed frame; best-effort (plan accessor is internal)
-        try:
-            ck._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:
-            pass
-
     e = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
     # repartition BY KEY with NO explicit count before checkpointing:
     # the symmetrized union would otherwise checkpoint at 2× the input
@@ -559,61 +535,38 @@ def connected_components(
     def _label_sum(df: DataFrame):
         return df.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
 
-    prev_sum = _label_sum(labels) if early_stop else None
+    prev_sum = _label_sum(labels)
     iterations, converged = 0, False
-    # rounds_per_checkpoint > 1 fuses that many propagation rounds into
-    # one materialized job: each fused round adds a join+agg layer to
-    # the plan (bounded depth — no lineage explosion), and the
-    # checkpoint + convergence collect run once per GROUP. On the
-    # shallow quasi-clique graphs dedup produces, per-round cost is
-    # job-scheduling overhead, not data volume, so halving the job
-    # count is a direct win; the price is fixpoint detection at group
-    # granularity (up to rounds_per_checkpoint−1 extra rounds of work
-    # after convergence — keep the default 1 when exact round counts
-    # matter).
     while iterations < max_iter:
-        chunk = min(rounds_per_checkpoint, max_iter - iterations)
-        stepped = labels
-        for _ in range(chunk):
-            # self-loops make the union redundant: messages to dst
-            # already include dst's own label
-            stepped = (
-                edges.join(stepped, edges["src"] == stepped["node"])
-                .select(F.col("dst").alias("node"), "label")
-                .groupBy("node")
-                .agg(F.min("label").alias("label"))
-            )
-        # LAZY checkpoint + let the convergence collect materialize it:
-        # one job per round instead of an eager-checkpoint job PLUS the
-        # label-sum job (r12 — halves the round count's scheduling).
-        new_labels = stepped.localCheckpoint(eager=False)
-        iterations += chunk
-        if early_stop:
-            s = _label_sum(new_labels)  # materializes the checkpoint
-            _free(labels)  # predecessor blocks no longer referenced
-            labels = new_labels
-            if s == prev_sum:
-                converged = True
-                break
-            prev_sum = s
-        else:
-            # no collect ever runs: the whole loop stays lazy and
-            # materializes pipelined at the caller's first action;
-            # intermediate blocks are ContextCleaner-released after the
-            # final checkpoint truncates their lineage
-            labels = new_labels
-    if early_stop:
-        # the returned labels are materialized (the last label-sum job),
-        # so the edge/node/sym checkpoints can be released now; in the
-        # lazy (early_stop=False) path they are still needed by the
-        # caller's first action and the ContextCleaner handles them
-        _free(edges)
-        if iterations > 0:
-            # the initial labels frame was a PROJECTION of the nodes
-            # checkpoint; once the first iteration materialized its own
-            # checkpoint nothing reads nodes anymore
-            _free(nodes)
-            _free(sym0)
+        # self-loops make the union redundant: messages to dst
+        # already include dst's own label. LAZY checkpoint + let the
+        # convergence collect materialize it: one job per round instead
+        # of an eager-checkpoint job PLUS the label-sum job (r12 —
+        # halves the round count's scheduling).
+        new_labels = (
+            edges.join(labels, edges["src"] == labels["node"])
+            .select(F.col("dst").alias("node"), "label")
+            .groupBy("node")
+            .agg(F.min("label").alias("label"))
+            .localCheckpoint(eager=False)
+        )
+        iterations += 1
+        s = _label_sum(new_labels)  # materializes the checkpoint
+        _free(labels)  # predecessor blocks no longer referenced
+        labels = new_labels
+        if s == prev_sum:
+            converged = True
+            break
+        prev_sum = s
+    # the returned labels are materialized (the last label-sum job), so
+    # the edge/node/sym checkpoints can be released now
+    _free(edges)
+    if iterations > 0:
+        # the initial labels frame was a PROJECTION of the nodes
+        # checkpoint; once the first iteration materialized its own
+        # checkpoint nothing reads nodes anymore
+        _free(nodes)
+        _free(sym0)
     if stats is not None:
         # observability for tests/operators: how many propagation rounds
         # ran and whether the fixpoint (not the iteration cap) ended them
@@ -652,13 +605,6 @@ def connected_components_jump(
     Same engineering contract as the plain variant: localCheckpoint
     per round (lineage reset), eager block release of superseded
     frontiers, label-sum fixpoint detection (labels only decrease)."""
-
-    def _free(ck: DataFrame) -> None:
-        try:
-            ck._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:
-            pass
-
     e = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
     # pinned ONCE (r12, same as the plain variant): `edges` and the
     # nodes/labels init both consume sym, and un-pinned each consumer

@@ -221,7 +221,7 @@ def pagerank_integer(
     rank-table block write per round for nothing (with AQE the round's
     shuffles already execute at plan-compile time; the lazy form just
     skips the extra job — measured ~9% warm and 60→48 jobs on the
-    copurchase query, scripts/ diag r12). Only the LAST round is eager,
+    copurchase query, OPTIMIZATION_r12.md). Only the LAST round is eager,
     which materializes the whole chain, after which every superseded
     round's blocks are freed explicitly — lazy checkpoints MUST keep
     the eager-free discipline or each call strands ~iterations block
@@ -386,12 +386,6 @@ def label_propagation(
     must keep the eager-free discipline — see pagerank_integer).
 
     Returns (node, lab) after `rounds` rounds; init lab(node) = node."""
-
-    def _free(ck: DataFrame) -> None:
-        try:
-            ck._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:
-            pass
     # Pin the symmetric edge list once (same rationale as bfs_hops:
     # lazy reuse re-executes the upstream edge construction per round).
     sym = (
@@ -485,12 +479,6 @@ def hits_integer_bipartite(
             "reports the final update of BOTH sides; a single "
             "iteration never scores the starting side)"
         )
-
-    def _free(ck: DataFrame) -> None:
-        try:
-            ck._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:
-            pass
     e = (
         edges.select(F.col(o_col).alias("o"), F.col(p_col).alias("p"))
         .distinct()

@@ -74,9 +74,9 @@ def _pin(rp: DataFrame) -> DataFrame:
     `spark.catalog.clearCache()` — they free when the last reference
     to the returned frame is dropped and the ContextCleaner runs
     (Python GC → py4j detach → JVM GC → cleaner). Verified empirically
-    (`scripts/verify_pin_release.py`): after clearCache alone 2 blocks
-    linger; after `gc.collect()` + `System.gc()` storage drains to 0
-    on every round — no accumulation across a long multi-query
+    (NOTES.md "r9 end-state", `_pin release`): after clearCache alone
+    2 blocks linger; after `gc.collect()` + `System.gc()` storage
+    drains to 0 on every round — no accumulation across a long multi-query
     session. bench.py triggers exactly that pair at each pass
     boundary; looped harnesses holding query results across many
     ranking calls should do the same."""

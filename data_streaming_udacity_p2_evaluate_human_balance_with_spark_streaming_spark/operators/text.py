@@ -41,19 +41,6 @@ def token_count(col: str = "text") -> Column:
     return F.size(tokens(col)).cast("bigint")
 
 
-def bpe_ish_token_count(col: str = "text") -> Column:
-    """BPE-ish upper bound: split on word boundaries AND every 4 chars
-    inside long words (a cheap, deterministic proxy for subword
-    tokenizers — ~chars/4 like common BPE vocabularies)."""
-    chars = F.length(F.regexp_replace(F.col(col), " ", ""))
-    words = token_count(col)
-    # each word contributes ceil(len/4) ≥ 1 subwords; approximate with
-    # words + extra 4-char chunks beyond the first in each word.
-    # floor() before the int cast: CAST(double AS BIGINT) truncates in
-    # Spark but rounds in DuckDB — floor is portable.
-    return F.floor(words + (chars - words) / F.lit(4.0)).cast("bigint")
-
-
 def stopword_hits(lang: str, col: str = "text") -> Column:
     words = ",".join(f"'{w}'" for w in STOPWORDS[lang])
     return F.expr(

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .graphs import _free
+
 
 def _merge_pair(syms: Column, a: str, b: str) -> Column:
     """Left-to-right non-overlapping replacement of adjacent (a, b)
@@ -119,10 +121,7 @@ def bpe_train(
         new_words = words.select(
             _merge_pair(F.col("syms"), a, b).alias("syms"), "wf"
         ).localCheckpoint()
-        try:
-            words._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:
-            pass
+        _free(words)
         words = new_words
     vocab = (
         words.select(F.explode("syms").alias("symbol"), "wf")

@@ -8016,7 +8016,7 @@ def q_eb_shrunk_purchase_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13: the code now matches the docstring — explicit
     # TakeOrderedAndProject top-20 (orderBy().limit()). Plan-NEUTRAL on
     # Spark 4 (InferWindowGroupLimit already limited under the window;
-    # verified in plans/r13/eb_shrunk_purchase_rate_*) — kept so the
+    # OPTIMIZATION_r13.md §6 "Top-k rank windows") — kept so the
     # heap cut is explicit, not optimizer-dependent. Bit-identical
     # (rounded rate before the cut, unique user_id tie-break).
     w = Window.orderBy(F.col("shrunk_rate").desc(), F.col("user_id").asc())
@@ -8408,7 +8408,7 @@ def _fs_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on Spark 4 — InferWindowGroupLimit already planted a
     # TakeOrderedAndProject under the rank window for the old
     # row_number+filter form (verified: before/after plan shapes are
-    # identical, plans/r13/fellegi_sunter_linkage_*), so the feared
+    # identical, OPTIMIZATION_r13.md §6), so the feared
     # single-task sort of the 4.5M-pair table never existed. Kept
     # because it makes the heap cut explicit rather than
     # optimizer-dependent. Bit-identical: match_weight is rounded
@@ -8421,7 +8421,7 @@ def _fs_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = sc.orderBy(*order).limit(20)
     return top.withColumn(
         "rank", F.row_number().over(Window.orderBy(*order)).cast("bigint")
-    ).filter(F.col("rank") <= 20)
+    )
 
 
 #: the Fellegi-Sunter scored-pair CTE chain, shared by the top-20 query
@@ -8559,7 +8559,7 @@ def q_entity_resolution_refined_blocks(
     ≥8-bit operating point: with this fixture's u-values, no
     nm2-disagreeing pair can reach 8 bits (max ≈ 6.9), hence the
     refined candidate set contains every link. Candidate-count drop
-    measured in scripts/scale_probe_linkage_refined.py (NOTES r10).
+    measured in NOTES.md "r10 opening session" (refined-blocks probe).
 
     Scale shape: linkage cost is Σ block² over blocks; refining the
     key from nation (|blocks| ≈ 25) to nation×nm2 (≈ 25·100) divides

@@ -25,7 +25,7 @@ Equivalence: sort_array(collect_set(p)) per order = the distinct parts
 of that order in ascending order; slice from i+2 pairs each part with
 every LARGER part of the same order — exactly the a.l_partkey <
 b.l_partkey join output. A/B measured at sf0.1/local[32] (min-of-3
-noop, quiet box, scripts/r13_ab_copurchase.py): edges 1.260 s →
+noop, quiet box, OPTIMIZATION_r13.md §2): edges 1.260 s →
 0.932 s (0.74×), counted pairs 1.151 s → 1.059 s (0.92×); edge and
 count sets bit-equal at sf0.01 (7565 rows each).
 """

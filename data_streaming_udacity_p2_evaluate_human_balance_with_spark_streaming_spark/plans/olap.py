@@ -2312,8 +2312,8 @@ def shingle_containment_core(
 ) -> DataFrame:
     """Query core of shingle_containment_pairs over an arbitrary docs
     frame (doc_id, lang, text) — split out so the salted-replica scale
-    probe (scripts/scale_probe_shingle.py) measures the EXACT
-    registered plan, not a copy that can drift."""
+    probe (NOTES.md "r9: shingle_containment_pairs made scale-linear")
+    measured the EXACT registered plan, not a copy that can drift."""
     w = F.split(F.col("text"), " ")
     d0 = docs.select("doc_id", "lang", w.alias("w")).filter(
         F.size("w") >= 4

@@ -995,8 +995,8 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     preceding order; event rows without a carried order (no prior
     order) are dropped, matching the oracle's inner join.
 
-    Measured quiet sf0.1 min-of-4 (scripts/profile_r8_asof.py, results
-    value-identical across all three): 0.218 s vs 0.787 s for the r7
+    Measured quiet sf0.1 min-of-4 (NOTES.md "r8: quiet re-baseline",
+    results value-identical across all three): 0.218 s vs 0.787 s for the r7
     broadcast+max(struct) plan and 0.963 s for pre-aggregated orders —
     the join fan-out (|events|·orders-per-user intermediate rows
     through the hash agg) was the whole regression, not build-side
@@ -3593,13 +3593,6 @@ _ROWS_ONLY_LATEST: set[str] = set()
 #: round number of each name's most recent driver row; populated as a
 #: side effect of _driver_status() (0 = unparsable filename)
 _LATEST_ROUND: dict[str, int] = {}
-
-
-def _driver_checked() -> frozenset[str]:
-    """Query names that already have a driver CORRECTNESS row (any round,
-    green or not — a row with err is still a consumed check the builder
-    must fix in place; red rows re-queue via _driver_order's red tier)."""
-    return frozenset(_driver_status())
 
 
 def _driver_order() -> list[str]:

@@ -3077,7 +3077,7 @@ def q_dbscan_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the committed oracle is unchanged and still certifies it).
     Candidates are Σ_cell |probe∩cell|·|home cell| ≈ 9·density·N
     instead of N²/2 — linear in N at fixed density (probed sub-
-    quadratic by scripts/scale_probe_dbscan.py: disjoint replicas at
+    quadratic, NOTES.md "r11": disjoint replicas at
     N×{{1,4,10}}). Floor division is computed as (code+10⁹) DIV 100 —
     an exact floor for these |code| ≤ ~526 inputs, immune to DIV's
     truncation toward zero. CC runs on core edges only."""

@@ -252,7 +252,7 @@ def q_item_item_cosine_parts(
     # r13: explicit top-K via orderBy().limit() — plan-NEUTRAL on
     # Spark 4 (InferWindowGroupLimit already planted a
     # TakeOrderedAndProject under the old row_number+filter form;
-    # verified in plans/r13/item_item_cosine_parts_*) — kept so the
+    # OPTIMIZATION_r13.md §6 "Top-k rank windows") — kept so the
     # heap cut is explicit, not optimizer-dependent. Bit-identical:
     # cosine is rounded BEFORE the cut and (p, q) is a unique total
     # tie-break.

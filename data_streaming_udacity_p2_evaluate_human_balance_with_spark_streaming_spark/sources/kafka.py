@@ -1,11 +1,11 @@
 """Kafka source/sink twins (SURVEY.md §2.1 S1/S2, §2.2 K1).
 
 The reference hardcodes broker (`localhost:9092`,
-`/root/reference/project/starter/sparkpykafkajoin.py:39`) and topic
-names; here every endpoint is a parameter. The kafka-sql jar is not in
-this container, so these builders only CONSTRUCT readers/writers — they
-fail at `.load()`/`.start()` time, not import time, and all engine
-logic is testable through the file/memory twins.
+`sparkpykafkajoin.py:39`) and topic names; here every endpoint is a
+parameter. The kafka-sql jar is not installed, so these builders only
+CONSTRUCT readers/writers — they fail at `.load()`/`.start()` time,
+not import time, and all engine logic is testable through the
+file/memory twins.
 """
 
 from __future__ import annotations
@@ -26,22 +26,6 @@ def kafka_stream(
         .option("kafka.bootstrap.servers", bootstrap_servers)
         .option("subscribe", topic)
         .option("startingOffsets", starting_offsets)
-        .load()
-    )
-
-
-def kafka_batch(
-    spark: SparkSession,
-    topic: str,
-    bootstrap_servers: str = "localhost:9092",
-) -> DataFrame:
-    """Batch twin of `kafka_stream` (reads the topic's full offset range)."""
-    return (
-        spark.read.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", "earliest")
-        .option("endingOffsets", "latest")
         .load()
     )
 

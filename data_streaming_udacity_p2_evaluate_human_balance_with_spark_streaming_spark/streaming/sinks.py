@@ -1,9 +1,10 @@
 """Streaming sinks (SURVEY.md §2.2) behind one interface.
 
 The reference uses exactly two sinks: Kafka with a checkpoint
-(`sparkpykafkajoin.py:145-152`) and console-append
-(`sparkpyrediskafkastreamtoconsole.py:102`). We add the test-friendly
-memory sink and a partitioned-parquet sink (the 100 TB landing path),
+(`sparkpykafkajoin.py:145-152`, here `sources/kafka.py:write_kafka`)
+and console-append (`sparkpyrediskafkastreamtoconsole.py:102`, a debug
+view). We add the test-friendly memory sink and a partitioned-parquet
+sink (the 100 TB landing path),
 with checkpointing configurable on EVERY query — the reference only
 checkpoints the Kafka sink (SURVEY.md §2.8-T8).
 """
@@ -22,11 +23,6 @@ def _checkpoint(dir_: str | None) -> str:
     return dir_ or os.path.join(
         tempfile.gettempdir(), f"stedi-ckpt-{uuid.uuid4().hex}"
     )
-
-
-def to_console(df: DataFrame, output_mode: str = "append") -> StreamingQuery:
-    """Console sink, append mode (sparkpyrediskafkastreamtoconsole.py:102)."""
-    return df.writeStream.outputMode(output_mode).format("console").start()
 
 
 def to_memory(

@@ -105,74 +105,6 @@ def running_risk_stats(
     )
 
 
-def running_risk_stats_tws(
-    events: DataFrame,
-    user_col: str = "user_id",
-    score_col: str = "value",
-    idle_ttl_ms: int | None = None,
-) -> DataFrame:
-    """transformWithStateInPandas twin of running_risk_stats — the
-    Spark 4 arbitrary-state API. Same semantics (per-key running
-    n/total/avg, one emission per key per micro-batch); state TTL is
-    native here (getValueState(ttlDurationMs=...)), so eviction needs
-    no timer plumbing: an idle key's state simply expires and its next
-    event restarts the aggregate.
-
-    The processor class is defined INSIDE this function on purpose:
-    workers don't have this package on sys.path, so the class must ship
-    by value (cloudpickle), not by module reference.
-
-    Environment note: executing this operator requires the
-    `google.protobuf` package (the transformWithState state-server
-    protocol is protobuf-framed); in containers without it the query
-    fails at initialization — the applyInPandasWithState twin above is
-    the dependency-free fallback (tests skip accordingly)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    score = score_col
-    ttl = idle_ttl_ms
-
-    class RunningRiskProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState(
-                "agg", "n bigint, total double", ttlDurationMs=ttl
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as _pd
-
-            n, total = self._agg.get() if self._agg.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf[score].sum())
-            self._agg.update((n, total))
-            yield _pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_score": [total],
-                    "avg_score": [total / n if n else 0.0],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.select(user_col, score_col)
-        .groupBy(user_col)
-        .transformWithStateInPandas(
-            RunningRiskProcessor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 def dedup_guard(
     events: DataFrame, key_col: str = "user_id", seq_col: str = "event_id"
 ) -> DataFrame:

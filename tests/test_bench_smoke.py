@@ -100,6 +100,28 @@ def test_bench_contract_fast_subset(tmp_path):
     assert all(v >= 0 for v in payload["queries"].values()), payload["queries"]
 
 
+def test_bench_rejects_unknown_query_names():
+    """A SPARK_GRAFT_BENCH_QUERIES name outside HEADLINE must fail the
+    run, naming the culprit, before any idle wait or JVM start — never
+    print an empty "valid" run."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "bench.py"],
+        cwd=repo,
+        env=dict(
+            os.environ,
+            SPARK_GRAFT_BENCH_QUERIES="customer_decode,no_such_query",
+        ),
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert out.returncode != 0
+    assert "no_such_query" in out.stderr
+    assert "customer_decode" not in out.stderr
+    assert not out.stdout.strip()
+
+
 @pytest.mark.slow
 def test_bench_prints_one_json_line(tmp_path):
     """FULL-headline smoke (every registered headline query runs and is

@@ -672,8 +672,8 @@ def test_embedding_mega_bucket_guard(spark):
 
 def test_connected_components_long_chain_early_stop(spark):
     """A planted path graph of diameter 15 (far beyond the default
-    max_iter=6): with a generous iteration cap, early_stop must end the
-    loop at the FIXPOINT — one confirmation round after the 15 rounds
+    max_iter=6): with a generous iteration cap, the loop must stop at
+    the FIXPOINT — one confirmation round after the 15 rounds
     min-label propagation needs — not at the cap, and every node must
     carry the true component minimum. Certifies the early-stop
     detection is a real fixpoint test on deep graphs, not something
@@ -685,7 +685,7 @@ def test_connected_components_long_chain_early_stop(spark):
     labels = {
         r.node: r.cluster
         for r in dedup.connected_components(
-            chain, max_iter=30, early_stop=True, stats=stats
+            chain, max_iter=30, stats=stats
         ).collect()
     }
     assert labels == {i: 0 for i in range(16)}

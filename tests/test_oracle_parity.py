@@ -54,22 +54,24 @@ def test_registry_fully_oracled():
 
 
 def test_register_rejects_duplicate_name():
-    """A duplicate @register name silently SHADOWED an earlier query
-    twice during r9 (dict overwrite) — the one demonstrated way a
-    green 343-board can lose a query without any gate firing. The
-    guard must raise, not overwrite."""
+    """A duplicate @register name used to silently overwrite the earlier
+    query AND its oracle in REGISTRY (dict assignment): it shadowed an
+    earlier query twice during r9, the one demonstrated way a green
+    board can lose a query without any gate firing. register() must
+    raise, and the original entry must stay untouched."""
     from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.plans.queries import (
         register,
     )
 
     existing = next(iter(REGISTRY))
+    before = REGISTRY[existing]
     with pytest.raises(ValueError, match="already registered"):
 
         @register(existing, "SELECT 1")
         def _dup(spark, sf_dir):  # pragma: no cover - must not register
             raise AssertionError
 
-    # and the original registration must be untouched
+    assert REGISTRY[existing] is before
     assert REGISTRY[existing][0].__name__ != "_dup"
 
 
@@ -126,10 +128,9 @@ def test_unchecked_queries_inside_driver_window():
 
 
 def test_register_rejects_duplicate_names():
-    """r9: a duplicate @register name used to silently overwrite the
-    earlier query AND its oracle in REGISTRY (dict assignment) — a
-    second winnowing_fingerprints shadowed the r3 original before
-    review caught it. register() now fails loudly."""
+    """Re-registering a known name with a None oracle must also fail
+    loudly: a second winnowing_fingerprints once shadowed the original
+    this way before review caught it."""
     from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.plans.queries import (
         register,
     )

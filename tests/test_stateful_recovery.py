@@ -3,8 +3,6 @@ skew-handling join."""
 
 import json
 
-import pytest
-
 from pyspark.sql import functions as F
 from pyspark.sql.types import _parse_datatype_string
 
@@ -367,42 +365,6 @@ def test_running_risk_stats_ttl_evicts_idle_state(spark, tmp_path):
     # first batch: (1, 10.0); post-eviction: restarted at (1, 30.0) — NOT (2, 40.0)
     assert u1 == [(1, 10.0), (1, 30.0)]
     assert tombstoned(emitted())
-
-
-def test_running_risk_stats_tws_matches_v1(spark):
-    """The transformWithStateInPandas twin must produce the same
-    running aggregates as the applyInPandasWithState form. Requires
-    google.protobuf (the TWS state-server wire protocol) — skipped
-    where it isn't installed (this container ships a broken stub)."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.streaming.stateful import (
-        running_risk_stats_tws,
-    )
-
-    rows = [
-        {"user_id": 1, "value": 10.0},
-        {"user_id": 1, "value": 20.0},
-        {"user_id": 2, "value": 5.0},
-    ]
-    from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.sources.memory import (
-        stream_from_rows,
-    )
-
-    stream = stream_from_rows(spark, rows, _parse_datatype_string(EV_SCHEMA))
-    out = running_risk_stats_tws(stream)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("risk_tws")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        r.user_id: (r.n_events, r.total_score, r.avg_score)
-        for r in spark.sql("SELECT * FROM risk_tws").collect()
-    }
-    assert got == {1: (2, 30.0, 15.0), 2: (1, 5.0, 5.0)}
 
 
 def test_funnel_tracker_matches_batch_funnel(spark, tmp_path):
