@@ -22,7 +22,7 @@ from pyspark.sql.window import Window
 
 from ..functions.hashing import MOD31 as MOD  # 31-bit hashes: ANSI-overflow-safe
 from ..functions.hashing import char_shingles, hashed, minhash_perm, word_shingles
-from .graphs import _free
+from .graphs import _free, _sym_edges
 
 
 def spread(df: DataFrame, col: str) -> DataFrame:
@@ -183,11 +183,14 @@ def minhash_lsh_candidates(
         shingle_k=shingle_k,
         shingle_mode=shingle_mode,
     )
-    # persist FIRST: shingling + 32 permutations are the expensive part,
+    # pin FIRST: shingling + 32 permutations are the expensive part,
     # and every consumer below (the gate's count branch, the gate's
-    # anti-join left side, both self-join sides) must read the cached
-    # triples (3 ints × docs × bands), never recompute them
-    banded = banded.persist()
+    # anti-join left side, both self-join sides) must read the pinned
+    # triples (3 ints × docs × bands), never recompute them. A lazy
+    # localCheckpoint, not persist(): a CacheManager entry is matched by
+    # plan and file path, so a later call over a rewritten directory
+    # would read the stale triples (the plans/olap.py q15 rule)
+    banded = banded.localCheckpoint(eager=False)
     if max_bucket is not None:
         banded = _drop_mega_buckets(banded, ["band", "bucket"], max_bucket)
 
@@ -424,10 +427,11 @@ def simhash_near_dups(
             )
         ).alias("cc"),
     ).select("_id", "sh", "cc.chunk", "cc.ck")
-    # persist FIRST: no consumer (gate count branch, gate anti left,
-    # either self-join side) may recompute the O(tokens × 64) simhash
-    # aggregate (4 ints per row — tiny)
-    chunked = chunked.persist()
+    # pin FIRST (lazy localCheckpoint, as in minhash_lsh_candidates):
+    # no consumer (gate count branch, gate anti left, either self-join
+    # side) may recompute the O(tokens × 64) simhash aggregate (4 ints
+    # per row — tiny)
+    chunked = chunked.localCheckpoint(eager=False)
     if max_bucket is not None:
         # bucket-size gate: count + broadcast-anti on the flooded
         # (chunk, ck) cells — see _drop_mega_buckets for why this beats
@@ -455,25 +459,33 @@ def connected_components(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    max_iter: int = 6,
+    max_iter: int = 12,
     stats: dict | None = None,
 ) -> DataFrame:
     """Cluster assignment over a near-dup pair graph: each node gets
-    cluster = the minimum doc id reachable within `max_iter` hops —
-    the true connected-component id whenever max_iter ≥ the graph
-    diameter. Dedup "keep one per cluster" then drops everything where
+    cluster = the minimum node id of its connected component once the
+    loop reaches its fixpoint within `max_iter` rounds (a cap only —
+    `stats["converged"]` says whether the fixpoint ended the loop).
+    Dedup "keep one per cluster" then drops everything where
     node != cluster.
 
     Pregel-style min-label propagation, one keyed shuffle join + one
-    hash aggregate per iteration; state is (node, label) int pairs,
-    never adjacency blowups. Near-dup graphs are SHALLOW (near-dups of
-    a doc are near-dups of each other, so components are
-    quasi-cliques); a small fixed max_iter converges in practice, and
-    the loop exits as soon as the (strictly monotone) label sum
-    stops decreasing — fixpoint detection for one cheap aggregate per
-    round. For adversarially long chains use the log-doubling
-    large-star/small-star variant (Kiveris et al.) — same join/agg
-    building blocks.
+    hash aggregate per round; state is (node, label) int pairs, never
+    adjacency blowups. Near-dup graphs are SHALLOW (near-dups of a doc
+    are near-dups of each other, so components are quasi-cliques) and
+    converge in 2-3 rounds; the loop exits as soon as the (strictly
+    monotone) label sum stops decreasing — fixpoint detection for one
+    cheap aggregate per round.
+
+    Deep components: from round 3 on, each round adds a path-halving
+    shortcut join, label ← least(label, label(label)) — the pointer
+    jumping of the large-star/small-star family (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond"). Round 3 is reached
+    only when both earlier rounds changed the label sum, so shallow
+    graphs keep the one-join plan while a 64-edge path converges
+    exactly within the default cap where plain propagation needs 64
+    rounds (tests/test_dedup_similarity.py). Labels are always
+    existing node ids, so the shortcut's inner join loses no row.
 
     Iterative algorithms REQUIRE lineage truncation: each round
     references the previous labels twice (message join + union), so an
@@ -492,7 +504,6 @@ def connected_components(
     final labels' blocks survive (the returned DataFrame reads them);
     callers wanting a fully clean session can unpersist via the same
     analyzed-plan handle after materializing."""
-    e = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
     # repartition BY KEY with NO explicit count before checkpointing:
     # the symmetrized union would otherwise checkpoint at 2× the input
     # partition count (64 static partitions for a few thousand edges at
@@ -506,15 +517,14 @@ def connected_components(
     # minhash-cluster queries that is a blocked O(block²) scoring join
     # or the full LSH verify chain — measured as the dominant cost of
     # entity_resolution_clusters, two 4.5M-row pair builds per call).
-    sym0 = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=False)
+    sym0 = _sym_edges(pairs, a_col, b_col).localCheckpoint(eager=False)
     # SELF-LOOP edges (node→node): min-over-messages then includes the
     # node's own label, so the propagation step is ONE join + ONE
     # aggregate with no union in the loop — both cheaper and immune to
-    # the Catalyst union-constraint failure hit when a union child's
-    # constraints reference join-produced frontier attributes (the
-    # pointer-jumping lesson, NOTES.md r4)
+    # the Catalyst union-constraint failure (UnionBase.rewriteConstraints
+    # throws `key not found: node#...`) hit when a union child's
+    # constraints reference the shortcut join's frontier attributes
+    # (NOTES.md r4)
     # node set computed ONCE: it seeds both the self-loops and the
     # initial labels (a second distinct over the symmetrized edges
     # would repeat the aggregate)
@@ -527,11 +537,11 @@ def connected_components(
     labels = nodes.select(
         F.col("src").alias("node"), F.col("src").alias("label")
     )
-    # convergence signal: labels only ever DECREASE (min-propagation),
-    # so the label sum is strictly monotone until fixpoint — an
-    # unchanged sum means converged. One overflow-safe aggregate per
-    # round, far cheaper than a changed-rows join; worth it because
-    # near-dup graphs usually converge in 2-3 of the max_iter rounds.
+    # convergence signal: labels only ever DECREASE (min-propagation
+    # and the shortcut both take minima), so the label sum is strictly
+    # monotone until fixpoint — an unchanged sum means converged. One
+    # overflow-safe aggregate per round, far cheaper than a
+    # changed-rows join.
     def _label_sum(df: DataFrame):
         return df.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
 
@@ -543,7 +553,7 @@ def connected_components(
         # convergence collect materialize it: one job per round instead
         # of an eager-checkpoint job PLUS the label-sum job (r12 —
         # halves the round count's scheduling).
-        new_labels = (
+        propagated = (
             edges.join(labels, edges["src"] == labels["node"])
             .select(F.col("dst").alias("node"), "label")
             .groupBy("node")
@@ -551,8 +561,22 @@ def connected_components(
             .localCheckpoint(eager=False)
         )
         iterations += 1
-        s = _label_sum(new_labels)  # materializes the checkpoint
+        new_labels = propagated
+        if iterations >= 3:
+            # path halving on the checkpointed (leaf) propagation
+            l, m = propagated.alias("l"), propagated.alias("m")
+            new_labels = (
+                l.join(m, F.col("l.label") == F.col("m.node"))
+                .select(
+                    F.col("l.node").alias("node"),
+                    F.least(F.col("l.label"), F.col("m.label")).alias("label"),
+                )
+                .localCheckpoint(eager=False)
+            )
+        s = _label_sum(new_labels)  # materializes this round's checkpoints
         _free(labels)  # predecessor blocks no longer referenced
+        if new_labels is not propagated:
+            _free(propagated)  # the shortcut's input
         labels = new_labels
         if s == prev_sum:
             converged = True
@@ -570,112 +594,6 @@ def connected_components(
     if stats is not None:
         # observability for tests/operators: how many propagation rounds
         # ran and whether the fixpoint (not the iteration cap) ended them
-        stats["iterations"] = iterations
-        stats["converged"] = converged
-    return labels.select("node", F.col("label").alias("cluster"))
-
-
-def connected_components_jump(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iter: int = 12,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Pointer-jumping variant of `connected_components` for graphs of
-    UNKNOWN or adversarial diameter: each round does (1) the same
-    neighbor min-propagation, then (2) a shortcut join that replaces
-    every label with its label's label (path halving). Distance to the
-    component minimum roughly halves per round, so convergence is
-    O(log diameter) rounds instead of O(diameter) — a 64-edge path
-    converges in ~7 rounds where plain propagation needs 64 (certified
-    in tests/test_dedup_similarity.py). This is the same round budget
-    the large-star/small-star construction (Kiveris et al., "Connected
-    Components in MapReduce and Beyond") achieves, with simpler
-    per-round plans: two keyed equi-joins + one hash aggregate.
-
-    Near-dup graphs are shallow quasi-cliques, so the DEFAULT operator
-    stays `connected_components` (one join per round beats two when 2-3
-    rounds suffice); reach for this one when the pair graph comes from
-    transitive linkage (fuzzy matching chains, citation/link graphs)
-    where a few long paths would otherwise dominate the iteration
-    count. Labels are always existing node ids (mins of the node set),
-    so the shortcut join is a total inner join — no row loss.
-
-    Same engineering contract as the plain variant: localCheckpoint
-    per round (lineage reset), eager block release of superseded
-    frontiers, label-sum fixpoint detection (labels only decrease)."""
-    e = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    # pinned ONCE (r12, same as the plain variant): `edges` and the
-    # nodes/labels init both consume sym, and un-pinned each consumer
-    # re-executed the caller's entire pair pipeline
-    sym = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=False)
-    # SELF-LOOPS instead of an in-loop `labels ∪ msgs` union: with
-    # (v, v) edges, min-over-messages alone already includes v's own
-    # label, so each round is join → aggregate with NO Union node.
-    # This sidesteps a Catalyst fragility: Union constraint rewriting
-    # (UnionBase.rewriteConstraints) throws `key not found: node#...`
-    # when a union child's constraints mention the join-produced
-    # frontier attrs this variant's shortcut creates — plain
-    # propagation tolerates it, pointer jumping did not.
-    nodes = sym.select(F.col("src").alias("node")).distinct()
-    edges = (
-        sym.unionByName(
-            nodes.select(F.col("node").alias("src"), F.col("node").alias("dst"))
-        )
-        .repartition("src")
-        .localCheckpoint(eager=False)
-    )
-    labels = nodes.select("node", F.col("node").alias("label")).localCheckpoint(
-        eager=False
-    )
-
-    def _label_sum(df: DataFrame):
-        return df.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
-
-    prev_sum = _label_sum(labels)
-    iterations, converged = 0, False
-    for _ in range(max_iter):
-        msgs = edges.join(labels, edges["src"] == labels["node"]).select(
-            F.col("dst").alias("node"), F.col("label").alias("label")
-        )
-        # checkpoint BEFORE the shortcut: the self-join needs a leaf
-        # plan on both sides (and the next iteration reads this frame
-        # twice — lineage reset, same contract as the plain variant).
-        # LAZY: the round's label-sum collect materializes both this
-        # and the shortcut checkpoint in one job (r12 — the eager form
-        # cost three blocking jobs per round).
-        propagated = (
-            msgs.groupBy("node")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=False)
-        )
-        # shortcut (path halving): label <- min(label, label(label)).
-        # Inner join is total: every label is an existing node id.
-        l, m = propagated.alias("l"), propagated.alias("m")
-        new_labels = (
-            l.join(m, F.col("l.label") == F.col("m.node"))
-            .select(
-                F.col("l.node").alias("node"),
-                F.least(F.col("l.label"), F.col("m.label")).alias("label"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        iterations += 1
-        s = _label_sum(new_labels)  # materializes propagated + shortcut
-        _free(labels)
-        _free(propagated)  # new_labels' lineage is truncated now
-        labels = new_labels
-        if s == prev_sum:
-            converged = True
-            break
-        prev_sum = s
-    _free(edges)
-    if iterations > 0:
-        _free(sym)  # edges/labels materialized; sym's blocks unneeded
-    if stats is not None:
         stats["iterations"] = iterations
         stats["converged"] = converged
     return labels.select("node", F.col("label").alias("cluster"))
@@ -793,12 +711,12 @@ def embedding_near_dups(
         ]
     )
     # (id, tab, bucket) triples only — the bucket dots are computed once
-    # and persisted so the self-join doesn't evaluate 2×tables×planes
-    # dot products per row.
+    # and pinned (lazy localCheckpoint, as in minhash_lsh_candidates) so
+    # the self-join doesn't evaluate 2×tables×planes dot products per row.
     bucketed = (
         spread(emb, "_id").select("_id", F.explode(tables).alias("tb"))
         .select("_id", "tb.tab", "tb.bucket")
-        .persist()  # every consumer reads the cached triples
+        .localCheckpoint(eager=False)
     )
     if max_bucket is not None:
         bucketed = _drop_mega_buckets(bucketed, ["tab", "bucket"], max_bucket)
@@ -1249,6 +1167,44 @@ def semantic_index(
     )
 
 
+def _int8_codes(pdf):
+    """(vid, q, n2) columns of a `semantic_index` Arrow batch as int64
+    numpy arrays — q stacked into a rows × dim matrix."""
+    import numpy as np
+
+    q = np.stack([np.asarray(x, dtype=np.int64) for x in pdf["q"]])
+    return (
+        pdf["vid"].to_numpy(dtype=np.int64),
+        q,
+        pdf["n2"].to_numpy(dtype=np.int64),
+    )
+
+
+def _int8_cosine_hits(qr, n2r, qc, n2c, t2, ids=None):
+    """Index pairs (i, j) whose int8-quantized cosine(qr[i], qc[j])
+    reaches the threshold, by the exact divisionless int64 test
+    qdot > 0 and 1e6·qdot² ≥ t2·n2r·n2c (in range by the
+    semantic_index dim ≤ 188 guard). Scored as one numpy GEMM per
+    1024-row block of qr, so a hot cell never materializes |qr|×|qc|
+    scores at once. `ids` marks a self-join (qr is qc): only pairs
+    with ids[i] < ids[j] are kept. qr must be non-empty."""
+    import numpy as np
+
+    out_r, out_c = [], []
+    for i0 in range(0, len(qr), 1024):
+        i1 = min(i0 + 1024, len(qr))
+        g = qr[i0:i1] @ qc.T
+        ok = (g > 0) & (
+            1_000_000 * g * g >= t2 * (n2r[i0:i1, None] * n2c[None, :])
+        )
+        if ids is not None:
+            ok &= ids[None, :] > ids[i0:i1, None]  # doc_a < doc_b, no self
+        ri, ci = np.nonzero(ok)
+        out_r.append(ri + i0)
+        out_c.append(ci)
+    return np.concatenate(out_r), np.concatenate(out_c)
+
+
 def incremental_semantic_dedup(
     index: DataFrame,
     batch: DataFrame,
@@ -1278,44 +1234,18 @@ def incremental_semantic_dedup(
 
     # r12: per-cell batch×corpus int64 GEMM in a cogrouped Arrow batch
     # replaces the interpreted per-candidate zip_with/aggregate chain —
-    # identical exact arithmetic (see _cell_pair_edges_gemm; the dim ≤
-    # 188 semantic_index guard bounds every int64 product), emitting
-    # the surviving (bid, cid) pairs; the min/count consolidation stays
-    # a JVM hash aggregate.
+    # identical exact arithmetic (_int8_cosine_hits, shared with
+    # _cell_pair_edges_gemm), emitting the surviving (bid, cid) pairs;
+    # the min/count consolidation stays a JVM hash aggregate.
     def cross(ldf, rdf):
-        import numpy as np
         import pandas as pd
 
-        empty = pd.DataFrame(
-            {
-                "bid": np.array([], dtype=np.int64),
-                "cid": np.array([], dtype=np.int64),
-            }
-        )
         if len(ldf) == 0 or len(rdf) == 0:
-            return empty
-        cids = ldf["vid"].to_numpy(dtype=np.int64)
-        qa = np.stack([np.asarray(x, dtype=np.int64) for x in ldf["q"]])
-        n2a = ldf["n2"].to_numpy(dtype=np.int64)
-        bids = rdf["vid"].to_numpy(dtype=np.int64)
-        qb = np.stack([np.asarray(x, dtype=np.int64) for x in rdf["q"]])
-        n2b = rdf["n2"].to_numpy(dtype=np.int64)
-        out_b, out_c = [], []
-        blk = 1024
-        for i0 in range(0, len(bids), blk):
-            i1 = min(i0 + blk, len(bids))
-            g = qb[i0:i1] @ qa.T
-            ok = (g > 0) & (
-                1_000_000 * g * g >= t2 * (n2b[i0:i1, None] * n2a[None, :])
-            )
-            bi, ci = np.nonzero(ok)
-            out_b.append(bids[bi + i0])
-            out_c.append(cids[ci])
-        if not out_b:
-            return empty
-        return pd.DataFrame(
-            {"bid": np.concatenate(out_b), "cid": np.concatenate(out_c)}
-        )
+            return pd.DataFrame({"bid": [], "cid": []}, dtype="int64")
+        cids, qa, n2a = _int8_codes(ldf)
+        bids, qb, n2b = _int8_codes(rdf)
+        bi, ci = _int8_cosine_hits(qb, n2b, qa, n2a, t2)
+        return pd.DataFrame({"bid": bids[bi], "cid": cids[ci]})
 
     hits = (
         index.select("vid", "cell", "q", "n2")
@@ -1353,52 +1283,21 @@ def _cell_pair_edges_gemm(
     norms are computed JVM-side by semantic_index (unchanged), the
     Arrow transfer carries int64, and the divisionless comparison
     1e6·qdot² ≥ t²·n2a·n2b runs in int64 — in-range by the
-    semantic_index dim ≤ 188 guard, the same bound the JVM path needs.
-    Row blocks of 1024 bound per-batch memory at block×cell matrices,
-    so a hot cell never materializes cell² scores at once.
+    semantic_index dim ≤ 188 guard, the same bound the JVM path needs
+    (_int8_cosine_hits, in 1024-row blocks).
 
     Returns (doc_a, doc_b) with doc_a < doc_b — the exact edge set of
     the zip_with form (oracle-certified via dedup_semantic_embedding)."""
     t2 = threshold_milli * threshold_milli
 
     def gen(pdf):
-        import numpy as np
         import pandas as pd
 
-        empty = pd.DataFrame(
-            {
-                "doc_a": np.array([], dtype=np.int64),
-                "doc_b": np.array([], dtype=np.int64),
-            }
-        )
-        n = len(pdf)
-        if n < 2:
-            return empty
-        ids = pdf["vid"].to_numpy(dtype=np.int64)
-        q = np.stack(
-            [np.asarray(x, dtype=np.int64) for x in pdf["q"]]
-        )
-        n2 = pdf["n2"].to_numpy(dtype=np.int64)
-        out_a, out_b = [], []
-        blk = 1024
-        for i0 in range(0, n, blk):
-            i1 = min(i0 + blk, n)
-            g = q[i0:i1] @ q.T
-            ok = (g > 0) & (
-                1_000_000 * g * g >= t2 * (n2[i0:i1, None] * n2[None, :])
-            )
-            ok &= ids[None, :] > ids[i0:i1, None]  # doc_a < doc_b, no self
-            ai, bi = np.nonzero(ok)
-            out_a.append(ids[ai + i0])
-            out_b.append(ids[bi])
-        if not out_a:
-            return empty
-        return pd.DataFrame(
-            {
-                "doc_a": np.concatenate(out_a),
-                "doc_b": np.concatenate(out_b),
-            }
-        )
+        if len(pdf) < 2:
+            return pd.DataFrame({"doc_a": [], "doc_b": []}, dtype="int64")
+        ids, q, n2 = _int8_codes(pdf)
+        ai, bi = _int8_cosine_hits(q, n2, q, n2, t2, ids=ids)
+        return pd.DataFrame({"doc_a": ids[ai], "doc_b": ids[bi]})
 
     return codes.select("vid", "cell", "q", "n2").groupBy("cell").applyInPandas(
         gen, "doc_a bigint, doc_b bigint"

@@ -30,6 +30,18 @@ def _free(ck: DataFrame) -> None:
         pass
 
 
+def _sym_edges(edges: DataFrame, a_col: str, b_col: str) -> DataFrame:
+    """(src, dst) rows for every undirected (a, b) pair in BOTH
+    directions — the edge list every propagation loop here reads.
+    Neither partitioned nor pinned: each caller adds its own
+    repartition and checkpoint."""
+    return edges.select(
+        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
+    ).unionByName(
+        edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
+    )
+
+
 def triangle_counts(
     edges: DataFrame,
     a_col: str = "pa",
@@ -232,15 +244,10 @@ def pagerank_integer(
 
     Returns (node, rank) with rank the final fixed-point integer."""
 
-    e = edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    sym = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    outdeg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
     # lazy pin: the overflow-guard count below materializes e2 AND the
     # initial ranks in ONE job (eager pins here cost one extra blocking
     # job each and a second pass over the edge build)
-    e2 = sym.join(outdeg, "src").repartition("src").localCheckpoint(eager=False)
+    e2 = _rank_edges(edges, a_col, b_col)
     base = (scale * (100 - damping_pct)) // 100
     ranks = (
         e2.select("src").distinct()
@@ -256,6 +263,29 @@ def pagerank_integer(
             f"BIGINT silently (ANSI off). Lower `scale` (need scale < "
             f"{2**63 // max(1, damping_pct * n_nodes)})."
         )
+    return _integer_rank_rounds(e2, ranks, iterations, damping_pct, F.lit(base))
+
+
+def _rank_edges(edges: DataFrame, a_col: str, b_col: str) -> DataFrame:
+    """(src, dst, od) out-edges with the source's out-degree, hash
+    partitioned on src and lazily pinned — the edge side of every
+    integer-rank round."""
+    sym = _sym_edges(edges, a_col, b_col)
+    outdeg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
+    return sym.join(outdeg, "src").repartition("src").localCheckpoint(eager=False)
+
+
+def _integer_rank_rounds(
+    e2: DataFrame, ranks: DataFrame, iterations: int, damping_pct: int, teleport
+) -> DataFrame:
+    """The round loop of pagerank_integer and
+    personalized_pagerank_integer: ranks join the out-edges `e2`, each
+    destination sums r DIV od, and its new rank is
+    teleport + (damping_pct·Σ) DIV 100, where `teleport` is a column
+    over `dst`. Lazy checkpoint per round, eager last round; that last
+    one materializes the chain, so every superseded round and e2 are
+    then freed. iterations=0 returns the still-lazy initial ranks,
+    which may read a never-materialized e2: nothing is freed then."""
     history = [ranks]
     for it in range(iterations):
         contrib = (
@@ -266,14 +296,13 @@ def pagerank_integer(
         )
         ranks = contrib.select(
             F.col("dst").alias("node"),
-            (F.lit(base) + F.expr(f"({damping_pct} * _sum) DIV 100")).alias("r"),
+            (teleport + F.expr(f"({damping_pct} * _sum) DIV 100")).alias("r"),
         ).localCheckpoint(eager=(it == iterations - 1))
         history.append(ranks)
-    # the eager final checkpoint materialized (and truncated) every
-    # intermediate round en route; release their blocks now
-    for h in history[:-1]:
-        _free(h)
-    _free(e2)
+    if iterations > 0:
+        for h in history[:-1]:
+            _free(h)
+        _free(e2)
     return ranks
 
 
@@ -315,10 +344,7 @@ def bfs_hops(
     # round; measured 4x round cost on the copurchase query). Lazy:
     # round 1's count materializes it alongside the first frontier.
     sym = (
-        edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionByName(
-            edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-        )
+        _sym_edges(edges, a_col, b_col)
         .repartition("src")
         .localCheckpoint(eager=False)
     )
@@ -389,10 +415,7 @@ def label_propagation(
     # Pin the symmetric edge list once (same rationale as bfs_hops:
     # lazy reuse re-executes the upstream edge construction per round).
     sym = (
-        edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionByName(
-            edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-        )
+        _sym_edges(edges, a_col, b_col)
         .repartition("src")
         .localCheckpoint(eager=False)
     )
@@ -576,19 +599,14 @@ def personalized_pagerank_integer(
     whole edge construction for the seed argmax before e2's checkpoint
     ran it again). Same exactness and overflow arguments as
     pagerank_integer (total mass is ≤ scale here, strictly easier);
-    same lazy per-round join+agg shape (see pagerank_integer — one
-    pipelined job for all rounds, not one blocking job per round).
+    the same round loop (_integer_rank_rounds — one pipelined job for
+    all rounds, not one blocking job per round).
 
     Returns (node, r) fixed-point ranks (nodes never reached hold 0
     implicitly and are not emitted — PPR mass is zero off the reachable
     set)."""
 
-    e = edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    sym = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    outdeg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
-    e2 = sym.join(outdeg, "src").repartition("src").localCheckpoint(eager=False)
+    e2 = _rank_edges(edges, a_col, b_col)
     if seed_node is None:
         # (src, od) pairs of e2 ARE the outdeg table (every node keeps
         # at least one symmetric edge), so the argmax reads the pinned
@@ -610,33 +628,8 @@ def personalized_pagerank_integer(
         .cast("long")
         .alias("r"),
     ).localCheckpoint(eager=False)
-    history = [ranks]
-    for it in range(iterations):
-        contrib = (
-            e2.join(ranks, e2["src"] == ranks["node"])
-            .select("dst", F.expr("r DIV od").alias("_c"))
-            .groupBy("dst")
-            .agg(F.sum("_c").alias("_sum"))
-        )
-        ranks = contrib.select(
-            F.col("dst").alias("node"),
-            (
-                F.when(F.col("dst") == seed_node, F.lit(restart))
-                .otherwise(F.lit(0))
-                + F.expr(f"({damping_pct} * _sum) DIV 100")
-            ).cast("long").alias("r"),
-        ).localCheckpoint(eager=(it == iterations - 1))
-        history.append(ranks)
-    # eager final round materialized the chain: free superseded blocks.
-    # iterations=0 returns the still-lazy initial ranks frame depending
-    # on the (possibly) never-materialized e2 — skip the frees then
-    # (r12 ADVICE; the seed argmax materializes e2 only when
-    # seed_node=None).
-    if iterations > 0:
-        for h in history[:-1]:
-            _free(h)
-        _free(e2)
-    return ranks
+    teleport = F.when(F.col("dst") == seed_node, F.lit(restart)).otherwise(F.lit(0))
+    return _integer_rank_rounds(e2, ranks, iterations, damping_pct, teleport)
 
 
 def anf_hop_registers(
@@ -679,10 +672,7 @@ def anf_hop_registers(
     if m not in (16, 64):
         raise ValueError(f"anf_hop_registers: unsupported m={m}")
     ex_fn = hll16_register_exprs if m == 16 else hll64_register_exprs
-    e = edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    sym = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
+    sym = _sym_edges(edges, a_col, b_col).localCheckpoint()
     nodes = sym.select(F.col("src").alias("node")).distinct()
     # salt the sketch key: node sets are often PRE-SAMPLED by a hash
     # of the same id (the co-purchase slice keeps md5 first char 0-3),
@@ -744,10 +734,7 @@ def anf_hop_summary(
     if m not in (16, 64):
         raise ValueError(f"anf_hop_summary: unsupported m={m}")
     ex_fn = hll16_register_exprs if m == 16 else hll64_register_exprs
-    e = edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    sym = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
+    sym = _sym_edges(edges, a_col, b_col).localCheckpoint()
     nodes = sym.select(F.col("src").alias("node")).distinct()
     ex = ex_fn("concat(CAST(node AS STRING), ':anf')")
     base = nodes.select(
@@ -826,10 +813,7 @@ def bfs_hops_tagged(
     nothing is freed or rewritten."""
     spark = edges.sparkSession
     sym = (
-        edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionByName(
-            edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-        )
+        _sym_edges(edges, a_col, b_col)
         .repartition("src")
         .localCheckpoint(eager=False)
     )

@@ -2194,6 +2194,8 @@ def q_markov_stationary_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration rounds run on |types|-row frames (localCheckpoint-ed per
     round, pagerank's bounded-plan-depth discipline), costing 30 tiny
     driver-scheduled jobs and zero corpus traffic."""
+    from ..operators.graphs import _free
+
     ev = load_table(spark, sf_dir, "events")
     wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
@@ -2240,12 +2242,7 @@ def q_markov_stationary_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         if (i + 1) % 6 == 0:
             prev_ck, last_ck = last_ck, dist.localCheckpoint()
             dist = last_ck
-            try:  # free the superseded checkpoint (CC discipline)
-                prev_ck._jdf.queryExecution().analyzed().rdd().unpersist(
-                    False
-                )
-            except Exception:
-                pass
+            _free(prev_ck)  # the superseded checkpoint (CC discipline)
     total = Window.partitionBy(F.lit(1))
     return dist.select(
         F.col("s").alias("event_type"),

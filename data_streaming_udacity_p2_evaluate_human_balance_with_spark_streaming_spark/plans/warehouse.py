@@ -750,9 +750,9 @@ def q_label_balance_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cluster_oracle() -> str:
-    """The pointer-jumping twin must agree with the recursive-CTE
-    connected-components oracle EXACTLY as the plain variant does —
-    reuse that registered SQL verbatim so the two can never drift."""
+    """The twin must agree with the recursive-CTE connected-components
+    oracle EXACTLY as `dedup_cluster_assignment` does — reuse that
+    registered SQL verbatim so the two can never drift."""
     from .queries import REGISTRY
 
     return REGISTRY["dedup_cluster_assignment"][1]
@@ -760,17 +760,17 @@ def _cluster_oracle() -> str:
 
 @register("dedup_cluster_pointer_jumping", _cluster_oracle())
 def q_dedup_cluster_pointer_jumping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster assignment via the O(log diameter) pointer-jumping
-    variant (operators.dedup.connected_components_jump) over the same
-    MinHash-LSH pair graph as `dedup_cluster_assignment` — certifies
-    the deep-graph scale path reaches the identical fixpoint on real
-    pairs (the log-round guarantee itself is certified on a planted
-    64-edge path in tests/test_dedup_similarity.py)."""
-    from ..operators.dedup import connected_components_jump, minhash_near_dups
+    """Cluster assignment over the same MinHash-LSH pair graph as
+    `dedup_cluster_assignment` via operators.dedup.connected_components,
+    whose path-halving shortcut (from round 3 on) is the deep-graph
+    scale path — certifies it reaches the identical fixpoint on real
+    pairs (its log-round behaviour is certified on a planted 64-edge
+    path in tests/test_dedup_similarity.py)."""
+    from ..operators.dedup import connected_components, minhash_near_dups
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_near_dups(docs, threshold=0.5)
-    return connected_components_jump(pairs)
+    return connected_components(pairs)
 
 
 @register(

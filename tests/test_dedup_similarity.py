@@ -469,13 +469,21 @@ def test_connected_components_frees_checkpoint_blocks(spark):
     measured leaking ~10 block sets per call otherwise, degrading
     later queries in the same session."""
     sc = spark.sparkContext._jsc.sc()
-    before = len(sc.getRDDStorageInfo())
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(0, 200, 2)], "doc_a long, doc_b long"
     )
-    dedup.connected_components(pairs, max_iter=6).collect()
-    after = len(sc.getRDDStorageInfo())
-    assert after <= before + 1, (before, after)
+    # a deep path reaches the path-halving rounds, whose shortcut
+    # input frames must be freed too
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(64)], "doc_a long, doc_b long"
+    )
+    for graph in (pairs, path):
+        before = len(sc.getRDDStorageInfo())
+        stats = {}
+        dedup.connected_components(graph, stats=stats).collect()
+        after = len(sc.getRDDStorageInfo())
+        assert after <= before + 1, (before, after, stats)
+    assert stats["iterations"] >= 3, stats  # the shortcut ran
 
 
 def test_fuzzy_block_guard_drops_mega_blocks(spark):
@@ -695,9 +703,10 @@ def test_connected_components_long_chain_early_stop(spark):
 
 
 def test_pointer_jumping_log_rounds_on_deep_path(spark):
-    """connected_components_jump must converge in O(log diameter)
-    rounds: a 64-edge path (diameter 64 — plain propagation would need
-    64 rounds) converges to the all-zero component in ≤ 9 rounds
+    """connected_components' path-halving shortcut (from round 3 on)
+    must converge in O(log diameter) rounds: at the DEFAULT cap, a
+    64-edge path (diameter 64 — plain propagation would need 64
+    rounds) converges to the all-zero component in ≤ 9 rounds
     including the fixpoint confirmation, with exact labels."""
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(64)], "doc_a long, doc_b long"
@@ -705,9 +714,7 @@ def test_pointer_jumping_log_rounds_on_deep_path(spark):
     stats = {}
     labels = {
         r.node: r.cluster
-        for r in dedup.connected_components_jump(
-            chain, max_iter=20, stats=stats
-        ).collect()
+        for r in dedup.connected_components(chain, stats=stats).collect()
     }
     assert labels == {i: 0 for i in range(65)}
     assert stats["converged"], stats
@@ -715,23 +722,59 @@ def test_pointer_jumping_log_rounds_on_deep_path(spark):
     spark.catalog.clearCache()
 
 
-def test_pointer_jumping_matches_plain_on_quasi_cliques(spark):
-    """On the shallow graphs dedup actually produces, both variants
-    assign identical clusters."""
+def test_connected_components_quasi_cliques_exact(spark):
+    """On the shallow graphs dedup actually produces, every node gets
+    its component's minimum id and separate components stay apart (the
+    3-hop 10..13 path also runs one shortcut round)."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (11, 12), (12, 13), (20, 21)],
         "doc_a long, doc_b long",
     )
-    a = {
+    stats = {}
+    got = {
         (r.node, r.cluster)
-        for r in dedup.connected_components(pairs, max_iter=8).collect()
+        for r in dedup.connected_components(pairs, stats=stats).collect()
     }
-    b = {
-        (r.node, r.cluster)
-        for r in dedup.connected_components_jump(pairs).collect()
+    assert got == {
+        (1, 1), (2, 1), (3, 1),
+        (10, 10), (11, 10), (12, 10), (13, 10),
+        (20, 20), (21, 20),
     }
-    assert a == b
+    assert stats["converged"], stats
     spark.catalog.clearCache()
+
+
+def test_minhash_candidates_fresh_after_in_place_rewrite(spark, tmp_path):
+    """minhash_lsh_candidates must not serve the previous call's band
+    table after the input directory is rewritten in place. A
+    persist() pin leaves a CacheManager entry matched by plan and file
+    path, so the second call would return the OLD near-dup pair."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    shared = " ".join(f"tok{j}" for j in range(40))
+    other = [" ".join(f"x{d}_{j}" for j in range(40)) for d in range(4)]
+
+    def write(dup_ids):
+        texts = list(other)
+        texts[dup_ids[0]] = shared + " tailA"
+        texts[dup_ids[1]] = shared + " tailB"
+        pq.write_table(
+            pa.table({"doc_id": pa.array(range(4), pa.int64()), "text": texts}),
+            str(tmp_path / "part-0.parquet"),
+        )
+
+    def candidates():
+        docs = spark.read.parquet(str(tmp_path))
+        return sorted(
+            (r.doc_a, r.doc_b)
+            for r in dedup.minhash_lsh_candidates(docs).collect()
+        )
+
+    write((0, 1))
+    assert candidates() == [(0, 1)]
+    write((2, 3))
+    assert candidates() == [(2, 3)]
 
 
 def test_simhash_packed_lanes_equal_plain(spark):
