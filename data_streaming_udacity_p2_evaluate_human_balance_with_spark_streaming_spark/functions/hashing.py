@@ -1,5 +1,5 @@
 """Hash-based column expressions shared by the dedup/similarity
-operators: shingling, minhash permutations, rolling fingerprints.
+operators: shingling, minhash permutations, block fingerprints.
 
 Everything is ANSI-safe (Spark 4 default): intermediates are bounded
 below 2^63 by reducing hashes to 31 bits before multiplication.
@@ -48,17 +48,6 @@ def minhash_perm(hash_expr: str, j: int) -> str:
     return f"pmod({2 * j + 1} * {hash_expr} + {j * 40_503 + 17}, {MOD31})"
 
 
-def rolling_fingerprint(col: str = "text") -> Column:
-    """Polynomial rolling hash over characters, mod 1e9+7 — portable
-    (no overflow wrap) and exactly reproducible in ANSI SQL. O(chars)
-    interpreted lambda steps: prefer `block_fingerprint` in profile
-    hot paths (same portability, ~10× fewer lambda iterations)."""
-    return F.expr(
-        f"aggregate(transform(split({col}, ''), c -> ascii(c)), "
-        f"CAST(0 AS BIGINT), (acc, c) -> (acc * 31 + c) % {MOD_ROLL})"
-    )
-
-
 #: block width for block_fingerprint: 32 chars per md5'd block keeps
 #: the interpreted fold at ~len/32 steps while md5 itself runs codegen'd
 BLOCK_FP_WIDTH = 32
@@ -68,11 +57,11 @@ def block_fingerprint(col: str = "text", width: int = BLOCK_FP_WIDTH) -> Column:
     """Order-sensitive content fingerprint via hash-of-substrings: the
     text is cut into fixed `width`-char blocks, each block md5'd (JVM
     codegen, not interpreted) and reduced to 31 bits, then the block
-    hashes fold through the same polynomial combine as
-    `rolling_fingerprint`. Same portability story (all intermediates
-    < 2^63, md5 and hex-parse identical in DuckDB) at ~width× fewer
-    interpreted lambda steps — measured 0.35 s → 0.21 s for the
-    fingerprint column alone at sf0.1. Still rolling ACROSS blocks:
+    hashes fold through a polynomial combine mod MOD_ROLL. Portable
+    (all intermediates < 2^63, md5 and hex-parse identical in DuckDB)
+    at ~width× fewer interpreted lambda steps than a per-character
+    fold — measured 0.35 s → 0.21 s for the fingerprint column alone
+    at sf0.1. Still rolling ACROSS blocks:
     appending a block updates the fingerprint incrementally."""
     blocks = (
         f"transform(sequence(0, CAST(greatest(ceil(length({col})/{width}.0), 1) AS INT) - 1), "

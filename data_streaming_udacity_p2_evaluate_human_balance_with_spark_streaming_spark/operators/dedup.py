@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.hashing import MOD31 as MOD  # 31-bit hashes: ANSI-overflow-safe
-from ..functions.hashing import char_shingles, hashed, minhash_perm, word_shingles
+from ..functions.hashing import char_shingles, minhash_perm, word_shingles
 from .graphs import _free, _sym_edges
 
 
@@ -57,7 +57,6 @@ def exact_dedup(docs: DataFrame, key: str = "text", id_col: str = "doc_id") -> D
 
 #: re-exports (public operator API; implementations in functions.hashing)
 shingles = word_shingles
-shingle_hashes = hashed
 
 
 def _drop_mega_buckets(df: DataFrame, keys: list[str], max_bucket: int) -> DataFrame:
@@ -78,6 +77,30 @@ def _drop_mega_buckets(df: DataFrame, keys: list[str], max_bucket: int) -> DataF
         .select(*keys)
     )
     return df.join(F.broadcast(flooded), keys, "left_anti")
+
+
+def _bucket_self_join(table: DataFrame, keys: list[str], max_bucket: int | None) -> DataFrame:
+    """Candidate generation shared by the LSH families: rows of `table`
+    (`_id` plus the two-column bucket `keys`) that share a bucket, as
+    the `l`/`r`-aliased self-join with l._id < r._id. The table is
+    pinned FIRST with a lazy localCheckpoint, so no consumer (the gate's
+    count branch, the gate's anti-join left side, either join side)
+    recomputes the expensive hashing that built it. localCheckpoint, not
+    persist(): a CacheManager entry is matched by plan and file path, so
+    a later call over a rewritten directory would read stale rows (the
+    plans/olap.py q15 rule). `max_bucket` drops flooded buckets first
+    (_drop_mega_buckets); None disables the gate."""
+    table = table.localCheckpoint(eager=False)
+    if max_bucket is not None:
+        table = _drop_mega_buckets(table, keys, max_bucket)
+    l, r = table.alias("l"), table.alias("r")
+    k1, k2 = keys
+    return l.join(
+        r,
+        (F.col(f"l.{k1}") == F.col(f"r.{k1}"))
+        & (F.col(f"l.{k2}") == F.col(f"r.{k2}"))
+        & (F.col("l._id") < F.col("r._id")),
+    )
 
 
 def lsh_band_table(
@@ -183,30 +206,13 @@ def minhash_lsh_candidates(
         shingle_k=shingle_k,
         shingle_mode=shingle_mode,
     )
-    # pin FIRST: shingling + 32 permutations are the expensive part,
-    # and every consumer below (the gate's count branch, the gate's
-    # anti-join left side, both self-join sides) must read the pinned
-    # triples (3 ints × docs × bands), never recompute them. A lazy
-    # localCheckpoint, not persist(): a CacheManager entry is matched by
-    # plan and file path, so a later call over a rewritten directory
-    # would read the stale triples (the plans/olap.py q15 rule)
-    banded = banded.localCheckpoint(eager=False)
-    if max_bucket is not None:
-        banded = _drop_mega_buckets(banded, ["band", "bucket"], max_bucket)
-
-    left = banded.alias("l")
-    right = banded.alias("r")
-    pairs = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
+    # shingling + 32 permutations are the expensive part: the helper
+    # pins the (_id, band, bucket) triples before the gate and the join
+    return (
+        _bucket_self_join(banded, ["band", "bucket"], max_bucket)
         .select(F.col("l._id").alias("doc_a"), F.col("r._id").alias("doc_b"))
         .distinct()
     )
-    return pairs
 
 
 def ngram_jaccard(
@@ -427,24 +433,10 @@ def simhash_near_dups(
             )
         ).alias("cc"),
     ).select("_id", "sh", "cc.chunk", "cc.ck")
-    # pin FIRST (lazy localCheckpoint, as in minhash_lsh_candidates):
-    # no consumer (gate count branch, gate anti left, either self-join
-    # side) may recompute the O(tokens × 64) simhash aggregate (4 ints
-    # per row — tiny)
-    chunked = chunked.localCheckpoint(eager=False)
-    if max_bucket is not None:
-        # bucket-size gate: count + broadcast-anti on the flooded
-        # (chunk, ck) cells — see _drop_mega_buckets for why this beats
-        # the count-window form (no sort of the full chunk table)
-        chunked = _drop_mega_buckets(chunked, ["chunk", "ck"], max_bucket)
-    l, r = chunked.alias("l"), chunked.alias("r")
+    # the helper pins the chunk table (4 ints per row — tiny) so no
+    # consumer recomputes the O(tokens × 64) simhash aggregate
     return (
-        l.join(
-            r,
-            (F.col("l.chunk") == F.col("r.chunk"))
-            & (F.col("l.ck") == F.col("r.ck"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
+        _bucket_self_join(chunked, ["chunk", "ck"], max_bucket)
         .select(
             F.col("l._id").alias("doc_a"),
             F.col("r._id").alias("doc_b"),
@@ -710,24 +702,14 @@ def embedding_near_dups(
             for t in range(n_tables)
         ]
     )
-    # (id, tab, bucket) triples only — the bucket dots are computed once
-    # and pinned (lazy localCheckpoint, as in minhash_lsh_candidates) so
-    # the self-join doesn't evaluate 2×tables×planes dot products per row.
-    bucketed = (
-        spread(emb, "_id").select("_id", F.explode(tables).alias("tb"))
-        .select("_id", "tb.tab", "tb.bucket")
-        .localCheckpoint(eager=False)
+    # (id, tab, bucket) triples only — the helper pins them, so the
+    # bucket dots are computed once and the self-join doesn't evaluate
+    # 2×tables×planes dot products per row.
+    bucketed = spread(emb, "_id").select("_id", F.explode(tables).alias("tb")).select(
+        "_id", "tb.tab", "tb.bucket"
     )
-    if max_bucket is not None:
-        bucketed = _drop_mega_buckets(bucketed, ["tab", "bucket"], max_bucket)
-    l, r = bucketed.alias("l"), bucketed.alias("r")
     pairs = (
-        l.join(
-            r,
-            (F.col("l.tab") == F.col("r.tab"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
+        _bucket_self_join(bucketed, ["tab", "bucket"], max_bucket)
         .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
         .distinct()
     )

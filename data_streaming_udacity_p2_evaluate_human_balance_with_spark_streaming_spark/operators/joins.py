@@ -92,20 +92,6 @@ BLOOM_JOIN_CONFS = {
 }
 
 
-def shuffle_join_with_runtime_pruning(
-    fact: DataFrame, dim: DataFrame, condition: str, how: str = "inner"
-) -> DataFrame:
-    """Big-big equi-join shape for dimensions ABOVE the broadcast
-    threshold but still selective: rely on Spark's runtime bloom-filter
-    injection (`might_contain(bloom_filter_agg(dim keys))` pushed into
-    the fact scan) to drop non-matching fact rows BEFORE the shuffle.
-    The plan itself is a plain shuffle join — the win is the runtime
-    filter the optimizer inserts when BLOOM_JOIN_CONFS thresholds are
-    met (see tests/test_plan_shapes.py::test_runtime_bloom_filter_join).
-    """
-    return fact.join(dim, F.expr(condition), how)
-
-
 def watermarked_stream_join(
     left: DataFrame,
     right: DataFrame,

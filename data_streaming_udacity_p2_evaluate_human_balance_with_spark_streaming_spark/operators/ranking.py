@@ -1,5 +1,5 @@
-"""Scale-safe global ranking: two-pass range-partitioned row numbering
-and the rank functions derived from it (NTILE, PERCENT_RANK, CUME_DIST).
+"""Scale-safe global ranking: two-pass range-partitioned scans and the
+rank functions derived from them (NTILE, PERCENT_RANK, CUME_DIST).
 
 The naive form — `Window.orderBy(...)` with no partition — funnels the
 ENTIRE dataset through one task (Spark warns `WindowExec: No Partition
@@ -9,12 +9,27 @@ Spark's own `zipWithIndex` on RDDs) is:
 
 1. `repartitionByRange` on the sort key → partition p holds a
    contiguous key range, partitions ordered p0 < p1 < …;
-2. per-partition local row_number (window PARTITIONED by the range
+2. a per-partition local window value (window PARTITIONED by the range
    partition id — parallel, no global funnel);
-3. per-partition row counts (P rows, P = #partitions) → cumulative
-   offsets via a tiny triangular self-join (P², driver-free, and no
+3. a per-partition aggregate of the same quantity (P rows, P =
+   #partitions) folded over the EARLIER partitions by a tiny
+   broadcast triangular self-join (P², driver-free, and no
    single-partition window even on the small side);
-4. global_rn = offset[p] + local_rn.
+4. the global value = combine(earlier-partition fold, local value).
+
+`_range_scan` is the one implementation of that construction (and of
+the `_pin` rule that keeps both passes on the same partition
+boundaries). It has two combines: **sum** — coalesce(sum(earlier), 0)
++ local (row numbers count rows, running sums add values) — and
+**max** — greatest(max(earlier), local), where greatest skips the NULL
+of the first partition. One pass may carry several outputs
+(global_running_sum_row_number: one range exchange, one pin).
+
+global_max_over_greater scans in DESCENDING key order with the local
+frame RANGE UNBOUNDED PRECEDING → 1 PRECEDING, i.e. key ≥ k + 1. That
+equals "key > k" only for integral keys, so it raises TypeError on any
+other key type (a fractional key between k and k + 1 would otherwise be
+seen or missed depending on which partition it lands in).
 
 Tie handling: rank/percent_rank/cume_dist are tie-aware; a groupBy on
 the order key computes min/max global_rn per distinct key, joined back.
@@ -29,7 +44,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.window import Window, WindowSpec
 
 
 def _order_cols(order: list[Column | str]) -> list[Column]:
@@ -41,8 +56,8 @@ def _pin(rp: DataFrame) -> DataFrame:
     partition boundaries.
 
     Both passes (local windows AND the per-partition counts/totals)
-    reference the same `repartitionByRange(...).withColumn(_pid, ...)`
-    node, but range boundaries come from sampling whose seed varies per
+    reference the same range-partitioned node (with its `_pid`
+    column), but range boundaries come from sampling whose seed varies per
     materialized RDD, and spark_partition_id is nondeterministic — so if
     the exchange is ever executed more than once, the offsets can be
     built against different boundaries than the local row numbers,
@@ -83,6 +98,63 @@ def _pin(rp: DataFrame) -> DataFrame:
     return rp.localCheckpoint(eager=True)
 
 
+#: combine name → (fold of the earlier partitions' aggregates,
+#: (fold, local) → global value)
+_COMBINES = {
+    "sum": (lambda c: F.coalesce(F.sum(c), F.lit(0)), lambda off, loc: off + loc),
+    "max": (F.max, lambda off, loc: F.greatest(loc, off)),
+}
+
+
+def _range_scan(
+    df: DataFrame,
+    order: list[Column | str],
+    scans: list[tuple[str, Column, Column, str]],
+    num_partitions: int | None = None,
+    frame: WindowSpec | None = None,
+    total: str | None = None,
+) -> DataFrame:
+    """The two-pass range scan (module docstring) behind every global
+    ranking operator. Each scan is (out_col, window_fn, part_agg,
+    combine): `window_fn` is evaluated per range partition in `order`
+    over `frame` (default ROWS UNBOUNDED PRECEDING → CURRENT ROW),
+    `part_agg` is the same quantity per partition, and `combine`
+    ("sum" | "max") folds the earlier partitions' aggregates into the
+    local value. All scans share one range exchange, one pin, one
+    local window sort and one triangular join. `total` names an extra
+    column holding the grand total of the first scan's aggregates
+    (global_row_number's `_total_n`)."""
+    cols = _order_cols(order)
+    rp = _pin(
+        (
+            df.repartitionByRange(num_partitions, *cols)
+            if num_partitions
+            else df.repartitionByRange(*cols)
+        ).withColumn("_pid", F.spark_partition_id())
+    )
+    if frame is None:
+        frame = Window.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    w = frame.partitionBy("_pid").orderBy(*cols)
+    outs, fns, parts, combines = zip(*scans)
+
+    local = rp
+    for i, fn in enumerate(fns):
+        local = local.withColumn(f"_local{i}", fn.over(w))
+    per = rp.groupBy("_pid").agg(*[p.alias(f"_part{i}") for i, p in enumerate(parts)])
+    a, b = per.alias("a"), per.alias("b")
+    offsets = (
+        a.join(F.broadcast(b), F.col("b._pid") < F.col("a._pid"), "left")
+        .groupBy(F.col("a._pid").alias("_pid"))
+        .agg(*[_COMBINES[c][0](f"b._part{i}").alias(f"_off{i}") for i, c in enumerate(combines)])
+    )
+    out = local.join(F.broadcast(offsets), "_pid")
+    for i, (out_col, c) in enumerate(zip(outs, combines)):
+        out = out.withColumn(out_col, _COMBINES[c][1](F.col(f"_off{i}"), F.col(f"_local{i}")))
+    if total:
+        out = out.crossJoin(F.broadcast(per.agg(F.sum("_part0").alias(total))))
+    return out.drop("_pid", *[f"_{t}{i}" for t in ("local", "off") for i in range(len(scans))])
+
+
 def global_row_number(
     df: DataFrame,
     order: list[Column | str],
@@ -99,33 +171,12 @@ def global_row_number(
     arbitrary-but-stable order from the per-partition sort; the
     tie-aware rank functions below never expose that arbitrariness).
     """
-    cols = _order_cols(order)
-    rp = _pin(
-        (
-            df.repartitionByRange(num_partitions, *cols)
-            if num_partitions
-            else df.repartitionByRange(*cols)
-        ).withColumn("_pid", F.spark_partition_id())
-    )
-
-    local = rp.withColumn(
-        "_local_rn", F.row_number().over(Window.partitionBy("_pid").orderBy(*cols))
-    )
-
-    counts = rp.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
-    a, b = counts.alias("a"), counts.alias("b")
-    offsets = (
-        a.join(F.broadcast(b), F.col("b._pid") < F.col("a._pid"), "left")
-        .groupBy(F.col("a._pid").alias("_pid"))
-        .agg(F.coalesce(F.sum("b._cnt"), F.lit(0)).alias("_offset"))
-    )
-    total = counts.agg(F.sum("_cnt").alias("_total_n"))
-
-    return (
-        local.join(F.broadcast(offsets), "_pid")
-        .withColumn(rn_col, F.col("_offset") + F.col("_local_rn"))
-        .crossJoin(F.broadcast(total))
-        .drop("_pid", "_local_rn", "_offset")
+    return _range_scan(
+        df,
+        order,
+        [(rn_col, F.row_number(), F.count(F.lit(1)), "sum")],
+        num_partitions,
+        total="_total_n",
     )
 
 
@@ -138,38 +189,9 @@ def global_running_sum(
 ) -> DataFrame:
     """Global cumulative SUM(value) in `order` (ROWS UNBOUNDED
     PRECEDING) without a single-partition window: per-range-partition
-    cumsum + the triangular join over per-partition value totals. Same
-    shape as global_row_number; the offsets table carries partition
-    value sums instead of row counts."""
-    cols = _order_cols(order)
-    rp = _pin(
-        (
-            df.repartitionByRange(num_partitions, *cols)
-            if num_partitions
-            else df.repartitionByRange(*cols)
-        ).withColumn("_pid", F.spark_partition_id())
-    )
-
-    local = rp.withColumn(
-        "_local_sum",
-        F.sum(value_col).over(
-            Window.partitionBy("_pid")
-            .orderBy(*cols)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        ),
-    )
-    totals = rp.groupBy("_pid").agg(F.sum(value_col).alias("_ptotal"))
-    a, b = totals.alias("a"), totals.alias("b")
-    offsets = (
-        a.join(F.broadcast(b), F.col("b._pid") < F.col("a._pid"), "left")
-        .groupBy(F.col("a._pid").alias("_pid"))
-        .agg(F.coalesce(F.sum("b._ptotal"), F.lit(0)).alias("_offset"))
-    )
-    return (
-        local.join(F.broadcast(offsets), "_pid")
-        .withColumn(out_col, F.col("_offset") + F.col("_local_sum"))
-        .drop("_pid", "_local_sum", "_offset")
-    )
+    cumsum + the sum combine over earlier partitions' value totals."""
+    s = F.sum(value_col)
+    return _range_scan(df, order, [(out_col, s, s, "sum")], num_partitions)
 
 
 def global_running_sum_row_number(
@@ -186,42 +208,17 @@ def global_running_sum_row_number(
     running coverage count to the next-boundary lookup by row number)
     previously ran global_running_sum and global_row_number separately,
     which computed and eagerly pinned the range-repartitioned input
-    TWICE and then re-joined the two outputs on the order key. Here the
-    per-partition window evaluates both functions over one sort, the
-    counts/totals come from one (_pid) aggregate, and the triangular
-    offset join carries both offsets — one range exchange, one pin, no
-    recombining join. Values are identical to the two separate ops
-    (`order` must be a total order, as global_row_number requires)."""
-    cols = _order_cols(order)
-    rp = _pin(
-        (
-            df.repartitionByRange(num_partitions, *cols)
-            if num_partitions
-            else df.repartitionByRange(*cols)
-        ).withColumn("_pid", F.spark_partition_id())
-    )
-    w = Window.partitionBy("_pid").orderBy(*cols)
-    local = rp.withColumn(
-        "_local_sum",
-        F.sum(value_col).over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    ).withColumn("_local_rn", F.row_number().over(w))
-    per = rp.groupBy("_pid").agg(
-        F.sum(value_col).alias("_ptotal"), F.count(F.lit(1)).alias("_cnt")
-    )
-    a, b = per.alias("a"), per.alias("b")
-    offsets = (
-        a.join(F.broadcast(b), F.col("b._pid") < F.col("a._pid"), "left")
-        .groupBy(F.col("a._pid").alias("_pid"))
-        .agg(
-            F.coalesce(F.sum("b._ptotal"), F.lit(0)).alias("_soff"),
-            F.coalesce(F.sum("b._cnt"), F.lit(0)).alias("_roff"),
-        )
-    )
-    return (
-        local.join(F.broadcast(offsets), "_pid")
-        .withColumn(sum_col, F.col("_soff") + F.col("_local_sum"))
-        .withColumn(rn_col, F.col("_roff") + F.col("_local_rn"))
-        .drop("_pid", "_local_sum", "_local_rn", "_soff", "_roff")
+    TWICE and then re-joined the two outputs on the order key. Here
+    both scans share one `_range_scan` pass — one range exchange, one
+    pin, one local window sort, one triangular join, no recombining
+    join. Values are identical to the two separate ops (`order` must be
+    a total order, as global_row_number requires)."""
+    s = F.sum(value_col)
+    return _range_scan(
+        df,
+        order,
+        [(sum_col, s, s, "sum"), (rn_col, F.row_number(), F.count(F.lit(1)), "sum")],
+        num_partitions,
     )
 
 
@@ -381,39 +378,25 @@ def global_max_over_greater(
 ) -> DataFrame:
     """For each row, MAX(value) over all rows with STRICTLY GREATER
     `key` (NULL if none) — the sort-based skyline/Pareto primitive —
-    without a single-partition window. Two-pass like global_row_number:
-    a per-range-partition suffix max (RANGE 1 FOLLOWING → UNBOUNDED on
-    the numeric key, so equal keys never see each other) plus a
-    broadcast triangular join over per-partition maxima. Correctness
-    rests on RangePartitioner placing equal keys in ONE partition:
-    every row in a higher partition has a strictly greater key, so
-    greatest(local suffix max, higher-partition max) is exact."""
-    rp = _pin(
-        (
-            df.repartitionByRange(num_partitions, F.col(key))
-            if num_partitions
-            else df.repartitionByRange(F.col(key))
-        ).withColumn("_pid", F.spark_partition_id())
-    )
-    local = rp.withColumn(
-        "_lmax",
-        F.max(value_col).over(
-            Window.partitionBy("_pid")
-            .orderBy(key)
-            .rangeBetween(1, Window.unboundedFollowing)
-        ),
-    )
-    totals = rp.groupBy("_pid").agg(F.max(value_col).alias("_pmax"))
-    a, b = totals.alias("a"), totals.alias("b")
-    offsets = (
-        a.join(F.broadcast(b), F.col("b._pid") > F.col("a._pid"), "left")
-        .groupBy(F.col("a._pid").alias("_pid"))
-        .agg(F.max("b._pmax").alias("_hmax"))
-    )
-    return (
-        local.join(F.broadcast(offsets), "_pid")
-        .withColumn(out_col, F.greatest("_lmax", "_hmax"))
-        .drop("_pid", "_lmax", "_hmax")
+    without a single-partition window. A max `_range_scan` in
+    DESCENDING key order: the local frame RANGE UNBOUNDED PRECEDING →
+    1 PRECEDING holds the rows with key ≥ k + 1 (so equal keys never
+    see each other), and the earlier partitions hold only greater keys
+    (RangePartitioner places equal keys in ONE partition). `key ≥ k + 1`
+    is `key > k` only for integral keys, so any other key type raises
+    TypeError."""
+    dtype = df.select(key).schema[0].dataType.simpleString()
+    if dtype not in ("tinyint", "smallint", "int", "bigint"):
+        raise TypeError(
+            f"global_max_over_greater needs an integral key; {key!r} is {dtype}"
+        )
+    m = F.max(value_col)
+    return _range_scan(
+        df,
+        [F.col(key).desc()],
+        [(out_col, m, m, "max")],
+        num_partitions,
+        frame=Window.rangeBetween(Window.unboundedPreceding, -1),
     )
 
 
@@ -425,40 +408,10 @@ def global_running_max(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Global running MAX(value) in `order` (ROWS UNBOUNDED PRECEDING)
-    without a single-partition window — same two-pass construction as
-    global_running_sum with max-combine: per-range-partition running
-    max + a triangular broadcast join over per-partition maxima for
-    the prefix-partition max (NULL for the first partition → the local
-    value stands alone). Max is associative and idempotent, so the
-    combine is exact for any orderable type."""
-    cols = _order_cols(order)
-    rp = _pin(
-        (
-            df.repartitionByRange(num_partitions, *cols)
-            if num_partitions
-            else df.repartitionByRange(*cols)
-        ).withColumn("_pid", F.spark_partition_id())
-    )
-    local = rp.withColumn(
-        "_local_max",
-        F.max(value_col).over(
-            Window.partitionBy("_pid")
-            .orderBy(*cols)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        ),
-    )
-    totals = rp.groupBy("_pid").agg(F.max(value_col).alias("_pmax"))
-    a, b = totals.alias("a"), totals.alias("b")
-    offsets = (
-        a.join(F.broadcast(b), F.col("b._pid") < F.col("a._pid"), "left")
-        .groupBy(F.col("a._pid").alias("_pid"))
-        .agg(F.max("b._pmax").alias("_offset"))
-    )
-    combined = F.when(
-        F.col("_offset").isNull(), F.col("_local_max")
-    ).otherwise(F.greatest(F.col("_local_max"), F.col("_offset")))
-    return (
-        local.join(F.broadcast(offsets), "_pid")
-        .withColumn(out_col, combined)
-        .drop("_pid", "_local_max", "_offset")
-    )
+    without a single-partition window — a max `_range_scan`: the local
+    running max combined with the earlier partitions' maxima (NULL for
+    the first partition → the local value stands alone). Max is
+    associative and idempotent, so the combine is exact for any
+    orderable type."""
+    m = F.max(value_col)
+    return _range_scan(df, order, [(out_col, m, m, "max")], num_partitions)

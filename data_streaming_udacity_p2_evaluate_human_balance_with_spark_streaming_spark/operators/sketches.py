@@ -125,8 +125,6 @@ HLL_ALPHA = 0.7213 / (1 + 1.079 / HLL_M)
 #: per-sketch accuracy (~26% σ) is certified in-query instead of
 #: engineered down. alpha_16 = 0.673 (Flajolet et al. 2007, small-m
 #: empirical constant).
-HLL16_M = 16
-HLL16_ALPHA = 0.673
 _HLL16_W_HEX = 12
 HLL16_RHO_MAX = 4 * _HLL16_W_HEX + 1
 
@@ -155,8 +153,6 @@ def hll16_register_exprs(key_sql: str) -> dict[str, str]:
 #: 1.04/√64 ≈ 13% per sketch — half the m=16 error at 4× the register
 #: rows, still 64·|V| ≪ 256·|V|. alpha_64 = 0.709 (Flajolet et al.
 #: 2007 small-m constant); linear-counting cutoff 2.5·m = 160.
-HLL64_M = 64
-HLL64_ALPHA = 0.709
 HLL64_RHO_MAX = 4 * _HLL16_W_HEX + 1  # rho stream = hex chars 3..14
 
 

@@ -4047,9 +4047,10 @@ def q_skyline_pareto_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one scan computing (x, y) per doc; the strictly-
     greater suffix max is the engine's TWO-PASS global_max_over_greater
-    (operators/ranking.py — range partition + per-partition suffix max
-    + broadcast triangular max join; equal keys colocate, so higher
-    partitions are strictly greater), never a no-partition window. The
+    (operators/ranking.py — descending range partition + per-partition
+    prefix max + broadcast triangular max join; equal keys colocate, so
+    earlier partitions are strictly greater), never a no-partition
+    window. The
     dominance test is two lookups per row — linear, vs the naive
     quadratic skyline join."""
     docs = load_table(spark, sf_dir, "documents")

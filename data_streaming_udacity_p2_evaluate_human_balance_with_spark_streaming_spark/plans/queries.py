@@ -1694,9 +1694,11 @@ def q_runtime_filtered_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shuffle-join shape that Spark's runtime bloom-filter pruning
     upgrades — a bloom built from the filtered orders keys is pushed
     into the lineitem scan, dropping non-urgent items BEFORE the
-    exchange (operators.joins.shuffle_join_with_runtime_pruning; plan
-    proof in test_plan_shapes.py under BLOOM_JOIN_CONFS thresholds)."""
-    from ..operators.joins import shuffle_join_with_runtime_pruning
+    exchange. The plan itself is a plain shuffle join (operators.joins.
+    equi_join); the win is the runtime filter the optimizer inserts
+    when the BLOOM_JOIN_CONFS thresholds are met (plan proof in
+    test_plan_shapes.py)."""
+    from ..operators.joins import equi_join
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice"
@@ -1705,9 +1707,7 @@ def q_runtime_filtered_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority") == "1-URGENT"
     ).select("o_orderkey", "o_orderpriority")
     return (
-        shuffle_join_with_runtime_pruning(
-            li, o, "l_orderkey = o_orderkey"
-        )
+        equi_join(li, o, "l_orderkey = o_orderkey")
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_items"),
@@ -2226,11 +2226,6 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("mean_recall_ge_080"),
         )
     )
-
-
-#: planted-PII suffix (the synthetic docs contain no natural PII, so
-#: redaction is exercised on deterministic plants — every 3rd doc)
-_PII_SUFFIX = " reach me at u{id}@mail.example.com or 415-555-0133 ssn 123-45-6789"
 
 
 def _pii_oracle() -> str:

@@ -3,10 +3,9 @@
 The reference duplicates these StructTypes across three scripts
 (``/root/reference/project/starter/sparkpykafkajoin.py:8-28``,
 ``sparkpyrediskafkastreamtoconsole.py:5-20``,
-``sparkpyeventskafkastreamtoconsole.py:19-23``). We keep both the
+``sparkpyeventskafkastreamtoconsole.py:19-23``). We keep the
 reference's string-typed "fidelity" schemas (numerics-as-strings, dates
-as strings — SURVEY.md §1.2) and properly-typed "engine" schemas for
-the scale path.
+as strings — SURVEY.md §1.2).
 """
 
 from __future__ import annotations
@@ -14,12 +13,9 @@ from __future__ import annotations
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
-    DateType,
-    DoubleType,
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 # --- fidelity schemas (byte-compatible with the reference) -----------------
@@ -65,26 +61,3 @@ STEDI_EVENT = StructType(
         StructField("riskDate", StringType()),
     ]
 )
-
-# --- engine schemas (properly typed; the 100 TB path) -----------------------
-
-CUSTOMER_TYPED = StructType(
-    [
-        StructField("customerName", StringType()),
-        StructField("email", StringType()),
-        StructField("phone", StringType()),
-        StructField("birthDay", DateType()),
-    ]
-)
-
-STEDI_EVENT_TYPED = StructType(
-    [
-        StructField("customer", StringType()),
-        StructField("score", DoubleType()),
-        StructField("riskDate", TimestampType()),
-    ]
-)
-
-#: Simple JSON payload carried by the synthetic `events.props` column
-#: (TESTDATA.md) — used by the json-parse parity queries.
-EVENT_PROPS = StructType([StructField("k", StringType())])

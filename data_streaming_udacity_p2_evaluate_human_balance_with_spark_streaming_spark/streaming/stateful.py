@@ -195,9 +195,6 @@ def funnel_stage_tracker(
         # self-contained: shipped by value, workers don't import this pkg
         import pandas as _pd
 
-        if state.hasTimedOut:  # no TTL configured; defensive
-            state.remove()
-            return
         t1, t2, t3 = state.get if state.exists else (None, None, None)
         pdf = _pd.concat(list(batches))
         pdf = pdf.sort_values(ts)
@@ -273,9 +270,6 @@ def transition_tracker(
         # self-contained: shipped by value, workers don't import this pkg
         import pandas as _pd
 
-        if state.hasTimedOut:
-            state.remove()
-            return
         last_type, last_ts = state.get if state.exists else (None, None)
         pdf = _pd.concat(list(batches)).sort_values(ts)
         counts: dict = {}

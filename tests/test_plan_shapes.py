@@ -135,7 +135,15 @@ def test_two_pass_ranking_no_single_partition_window(spark, name):
 
 @pytest.mark.parametrize(
     "name",
-    ["ntile_quartiles_scale", "percent_rank_cume_dist_scale", "pack_shards_token_budget"],
+    [
+        "ntile_quartiles_scale",
+        "percent_rank_cume_dist_scale",
+        "pack_shards_token_budget",
+        "peak_concurrency",
+        "skyline_pareto_docs",
+        "active_coverage_time",
+        "watermark_lateness_profile",
+    ],
 )
 def test_two_pass_ranking_reuses_range_exchange(spark, name):
     """Two-pass ranking correctness depends on BOTH branches (local

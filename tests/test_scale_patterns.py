@@ -1475,6 +1475,28 @@ def test_global_max_over_greater_property(spark, pts, parts):
         assert got[i] == want, (i, k, v, got[i], want)
 
 
+def test_global_max_over_greater_rejects_non_integral_key(spark):
+    """The strictly-greater frame is `key >= k + 1`, which equals
+    `key > k` only for integral keys: with keys (1.0, 1.5, 3.0) and
+    values (1, 10, 5), row 0 would get 5 at 1 or 2 partitions (1.5 is
+    not >= 2.0) and 10 at 3 (1.5 lands in a later partition). A
+    non-integral key must raise TypeError naming its dtype instead of
+    answering by partition count."""
+    from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.operators.ranking import (
+        global_max_over_greater,
+    )
+
+    df = spark.createDataFrame(
+        [(1.0, 1), (1.5, 10), (3.0, 5)], "k double, v bigint"
+    )
+    for parts in (1, 2, 3):
+        with pytest.raises(TypeError, match="double"):
+            global_max_over_greater(df, "k", "v", num_partitions=parts)
+    for dtype in ("tinyint", "smallint", "int", "bigint"):
+        ok = df.select(F.col("k").cast(dtype).alias("k"), "v")
+        assert global_max_over_greater(ok, "k", "v").count() == 3
+
+
 @settings(
     max_examples=6,
     deadline=None,
