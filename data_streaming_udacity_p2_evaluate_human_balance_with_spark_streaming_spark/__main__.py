@@ -11,7 +11,8 @@ show NAME                 print the physical plan (explain formatted)
 oracle NAME               print the DuckDB oracle SQL, if any
 
 Options: --sf-dir PATH (default /root/testdata/sf0.01), --cpus N
-(default 8), --limit N (default 20 rows printed), --json (NDJSON rows
+(default $SPARK_GRAFT_CPUS, else the cores this process may run on),
+--limit N (default 20 rows printed), --json (NDJSON rows
 to stdout instead of the table renderer).
 """
 
@@ -21,13 +22,15 @@ import argparse
 import json
 import sys
 
+from .session import DEFAULT_CPUS
+
 
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog=__package__, description=__doc__)
     p.add_argument("command", choices=["list", "run", "show", "oracle"])
     p.add_argument("names", nargs="*")
     p.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-    p.add_argument("--cpus", type=int, default=8)
+    p.add_argument("--cpus", type=int, default=DEFAULT_CPUS)
     p.add_argument("--limit", type=int, default=20)
     p.add_argument("--json", action="store_true")
     args = p.parse_args(argv)

@@ -14,6 +14,13 @@ that matter at scale:
   ``zSetEntries`` declared vs ``zsetEntries`` referenced,
   ``sparkpykafkajoin.py:13,79``)
 - Arrow enabled for the Pandas-UDF slow path (vectorized transfer)
+- streaming checkpoints written through the Hadoop FileSystem API and
+  RocksDB state checkpointed as per-commit changelogs: without the
+  native Hadoop library the default FileContext manager forks
+  ``readlink``/``chmod``/``rm -rf`` for every checkpoint file, and a
+  full RocksDB snapshot per commit zips every store every batch
+- with ``SPARK_GRAFT_CPUS`` unset, master and shuffle partitions are
+  sized to the cores this process may run on (its CPU affinity)
 """
 
 from __future__ import annotations
@@ -22,7 +29,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+)
 
 
 def get_spark(
@@ -53,6 +62,21 @@ def get_spark(
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider",
+        )
+        # the default FileContext-based manager goes through Hadoop's
+        # local filesystem, which without the native library forks
+        # readlink/chmod/rm -rf per checkpoint, .crc and temp file
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
+        # each commit uploads a small changelog file; a full RocksDB
+        # snapshot is zipped only every minDeltasForSnapshot versions
+        .config(
+            "spark.sql.streaming.stateStore.rocksdb."
+            "changelogCheckpointing.enabled",
+            "true",
         )
         # the synthetic events table stores ts as TIMESTAMP(NANOS); Spark
         # has no nanos type — read as long, normalized in sources.files

@@ -21,8 +21,9 @@ class QueryRunner:
 
     def drain(self, name: str | None = None) -> None:
         """Process everything currently available, then return (the
-        deterministic test mode). With availableNow triggers, waits for
-        termination instead."""
+        deterministic test mode). Only active queries are drained; a
+        query that already terminated, such as a finished availableNow
+        query, is skipped."""
         targets = [self.queries[name]] if name else list(self.queries.values())
         for q in targets:
             if q.isActive:

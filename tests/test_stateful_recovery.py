@@ -78,10 +78,66 @@ def test_stateful_state_carries_across_batches(spark, tmp_path):
     assert by_n[2] == (40.0, 20.0)  # resumed state + batch 2
 
 
+def test_get_spark_ships_checkpoint_defaults(spark):
+    """The session factory ships the streaming state defaults: RocksDB
+    state with changelog checkpointing, and checkpoint files written
+    through the FileSystem API (no forked helpers per file without the
+    native Hadoop library). A caller whose extra_conf sets unrelated
+    keys, as perfbench's does, keeps all three."""
+    from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark import (
+        get_spark,
+    )
+
+    shipped = {
+        "spark.sql.streaming.stateStore.providerClass": "org.apache.spark.sql."
+        "execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.sql.streaming.checkpointFileManagerClass": "org.apache.spark.sql."
+        "execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+    }
+    again = get_spark(
+        app_name="stedi-tests",
+        master="local[4]",
+        shuffle_partitions=4,
+        extra_conf={"spark.ui.enabled": "false", "spark.sql.session.timeZone": "UTC"},
+    )
+    for s in (spark, again):
+        assert {k: s.conf.get(k) for k in shipped} == shipped
+
+
+def test_default_cpus_follows_affinity():
+    """Without SPARK_GRAFT_CPUS the fallback session is sized to the
+    cores this process may run on; the variable still overrides it."""
+    import os
+    import subprocess
+    import sys
+
+    probe = (
+        "from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark"
+        " import session; print(session.DEFAULT_CPUS)"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+
+    def default_cpus(**extra):
+        out = subprocess.run(
+            [sys.executable, "-c", probe],
+            env={**env, **extra},
+            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            capture_output=True,
+            text=True,
+            check=True,
+        )
+        return int(out.stdout.strip())
+
+    assert default_cpus() == len(os.sched_getaffinity(0))
+    assert default_cpus(SPARK_GRAFT_CPUS="3") == 3
+
+
 def test_flagship_restart_no_duplicates(spark, tmp_path):
-    """T8: kill + resume the flagship pipeline from its checkpoint —
-    already-committed inputs must not be re-emitted (exactly-once
-    landing)."""
+    """T8, stateless leg: kill + resume the customer decode pipeline
+    from its checkpoint — already-committed inputs must not be
+    re-emitted (exactly-once landing). The stateful flagship join's
+    restart is test_flagship_join_restart_exactly_once."""
     import base64
 
     from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.plans import (
@@ -133,6 +189,151 @@ def test_flagship_restart_no_duplicates(spark, tmp_path):
     landed = spark.read.parquet(out_dir)
     emails = sorted(r.email for r in landed.collect())
     assert emails == ["a@test.com", "b@test.com"]  # each exactly once
+
+
+def test_flagship_join_restart_exactly_once(spark, tmp_path):
+    """T8, stateful flagship: the checkpointed stream-stream join of
+    customers and risk events lands in the parquet sink one file pair
+    per micro-batch. After 12 batches the query stops and its last
+    `commits/<N>` file is deleted: a crash after batch N ran but
+    before it committed. Two restarts from the same checkpoint then
+    add files; the first restores both sides' join state from a RocksDB
+    snapshot plus the changelogs after it (on the shipped defaults) and
+    replays batch N. The landed `value` multiset must equal the batch twin
+    over every input: batch N lands once, and customers stored before
+    a restart still join events that arrive after it."""
+    import base64
+    import glob
+    import os
+    import time
+    from collections import Counter
+
+    from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.plans import (
+        pipelines,
+    )
+    from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.streaming import (
+        sinks,
+    )
+
+    def b64(s):
+        return base64.b64encode(s.encode()).decode()
+
+    def customer(i):
+        element = b64(
+            json.dumps(
+                {
+                    "customerName": f"C{i}",
+                    "email": f"c{i}@test.com",
+                    "phone": str(i),
+                    "birthDay": f"{1950 + i}-01-01",
+                }
+            )
+        )
+        return {
+            "key": b64("Customer"),
+            "value": json.dumps(
+                {
+                    "key": b64("Customer"),
+                    "existType": "NONE",
+                    "Ch": False,
+                    "Incr": False,
+                    "zSetEntries": [{"element": element, "Score": "0.0"}],
+                }
+            ),
+        }
+
+    def event(i, score):
+        who = f"c{i}@test.com"
+        return {
+            "key": who,
+            "value": json.dumps(
+                {"customer": who, "score": str(score), "riskDate": "2020-09-14"}
+            ),
+        }
+
+    src = {"customers": str(tmp_path / "customers"), "events": str(tmp_path / "events")}
+    for d in src.values():
+        os.makedirs(d)
+    n_files = {"customers": 0, "events": 0}
+
+    def add_file(kind, rows):
+        n = n_files[kind]
+        path = f"{src[kind]}/part-{n:03d}.json"
+        with open(path, "w") as f:
+            for r in rows:
+                f.write(json.dumps(r) + "\n")
+        # one file per trigger, taken in this order
+        os.utime(path, (1700000000 + n,) * 2)
+        n_files[kind] += 1
+
+    schema = _parse_datatype_string("key string, value string")
+    ckpt, out_dir = str(tmp_path / "ckpt"), str(tmp_path / "out")
+
+    def run_once():
+        cust, ev = (
+            spark.readStream.format("json")
+            .schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .load(src[kind])
+            for kind in ("customers", "events")
+        )
+        out = pipelines.flagship_join_as_kafka_value(cust, ev)
+        sinks.to_parquet(out, out_dir, checkpoint_dir=ckpt, available_now=True).awaitTermination()
+
+    # run 1: customer i arrives in batch i; batch i's events join it,
+    # an earlier customer held in state, and nobody
+    for i in range(12):
+        add_file("customers", [customer(i)])
+        add_file("events", [event(i, i), event(i // 2, 100 + i), event(99, i)])
+    run_once()
+    commits = sorted(int(f) for f in os.listdir(f"{ckpt}/commits") if f.isdigit())
+    assert commits == list(range(12)), commits
+    # a crash before the commit leaves neither the file nor its checksum
+    for name in (f"{commits[-1]}", f".{commits[-1]}.crc"):
+        if os.path.exists(f"{ckpt}/commits/{name}"):
+            os.remove(f"{ckpt}/commits/{name}")
+    # replaying batch 11 must load state version 11: a snapshot plus the
+    # changelogs after it. With changelog checkpointing the snapshot is
+    # uploaded by the state store's maintenance task (every 60 s by
+    # default), so wait until every store has one.
+    stores = [
+        d
+        for d in glob.glob(f"{ckpt}/state/0/*/*")
+        if os.path.isdir(d) and os.path.basename(os.path.dirname(d)).isdigit()
+    ]
+    deadline = time.monotonic() + 180
+    while not all(glob.glob(f"{d}/*.zip") for d in stores) and time.monotonic() < deadline:
+        time.sleep(1)
+    assert stores and all(glob.glob(f"{d}/*.zip") for d in stores), stores
+
+    # run 2: events for customers stored before the crash, a new
+    # customer, and a re-emitted customer version (joins twice after)
+    add_file("customers", [customer(12)])
+    add_file("customers", [customer(1)])
+    add_file("events", [event(0, 200), event(11, 201), event(12, 202)])
+    add_file("events", [event(1, 203), event(5, 204)])
+    run_once()
+
+    # run 3: events for customers from both earlier runs, and one whose
+    # customer arrives in this run's batch
+    add_file("customers", [customer(13)])
+    add_file("events", [event(1, 300), event(12, 301), event(13, 302), event(3, 303)])
+    run_once()
+
+    landed = Counter(r.value for r in spark.read.parquet(out_dir).collect())
+    twin = pipelines.flagship_join_as_kafka_value(
+        spark.read.schema(schema).json(src["customers"]),
+        spark.read.schema(schema).json(src["events"]),
+    )
+    expected = Counter(r.value for r in twin.collect())
+    assert landed == expected
+    scores = Counter(json.loads(v)["score"] for v in landed.elements())
+    # customers from run 1 join events from each later run; the batch
+    # replayed after the crash landed once and stored its customer once;
+    # the re-emitted customer joins twice
+    assert scores["200"] == scores["303"] == 1
+    assert scores["11"] == scores["201"] == 1
+    assert scores["203"] == scores["300"] == 2
 
 
 def test_dedup_guard_suppresses_replays(spark, tmp_path):
