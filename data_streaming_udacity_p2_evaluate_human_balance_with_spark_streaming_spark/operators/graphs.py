@@ -653,8 +653,8 @@ def anf_hop_registers(
 
     Returns (hop, node, bucket_hex, rho) for hop 0..max_hops — hop 0
     is each node's singleton sketch. Finalize any slice with the
-    portable estimate arithmetic (operators/sketches.py m=16
-    constants); register tables merge associatively so the per-hop
+    portable estimate arithmetic (operators/sketches.py
+    HLL_SUMMARY_SQL, hll_estimate_sql(m)); register tables merge associatively so the per-hop
     snapshots also answer "NF of any seed subset" by filtering.
 
     Iteration shape: per round, edges ⋈ registers on the node key
@@ -666,12 +666,10 @@ def anf_hop_registers(
     Snapshots are RETAINED — every hop is part of the result.
 
     `m` picks the per-node sketch width: 16 (default, σ≈26%) or the
-    r11 VERDICT #5 graduation 64 (σ≈13% at 4× register rows)."""
-    from .sketches import hll16_register_exprs, hll64_register_exprs
+    r11 VERDICT #5 graduation 64 (σ≈13% at 4× register rows); the
+    register format is operators/sketches.py hll_register_exprs."""
+    from .sketches import hll_register_exprs
 
-    if m not in (16, 64):
-        raise ValueError(f"anf_hop_registers: unsupported m={m}")
-    ex_fn = hll16_register_exprs if m == 16 else hll64_register_exprs
     sym = _sym_edges(edges, a_col, b_col).localCheckpoint()
     nodes = sym.select(F.col("src").alias("node")).distinct()
     # salt the sketch key: node sets are often PRE-SAMPLED by a hash
@@ -680,7 +678,7 @@ def anf_hop_registers(
     # 4 of 16 buckets could ever fill, capping every estimate at
     # 16·ln(16/12). The salt makes bucket/rho independent of any
     # id-hash sampling upstream.
-    ex = ex_fn("concat(CAST(node AS STRING), ':anf')")
+    ex = hll_register_exprs("concat(CAST(node AS STRING), ':anf')", m)
     cur = nodes.select(
         "node",
         F.expr(ex["bucket_hex"]).alias("bucket_hex"),
@@ -720,36 +718,24 @@ def anf_hop_summary(
     m-fold (16× at m=16, 64× at m=64) with the identical recurrence:
     column j holds bucket j's rho (0 = register empty; true rho ≥ 1),
     and column-wise max over the union of self + neighbor rows IS the
-    per-bucket max over the unpacked rows. The bucket string → column
-    index map is the obvious bijection (hex char position, plus the
-    quadrant digit for m=64), so s_int / n_regs are equal term-for-term
-    to the unpacked operator's — pinned by pytest against
-    anf_hop_registers on the same graph.
+    per-bucket max over the unpacked rows. Column j is the register
+    whose integer `bucket` (hll_register_exprs) is j, so s_int / n_regs
+    are equal term-for-term to the unpacked operator's — pinned by
+    pytest against anf_hop_registers on the same graph.
 
     Same checkpoint discipline as anf_hop_registers: per-hop LAZY
     localCheckpoints (plan-depth bound, no blocking job per hop);
     snapshots are all retained — every hop is part of the result."""
-    from .sketches import hll16_register_exprs, hll64_register_exprs
+    from .sketches import hll_register_exprs, hll_term
 
-    if m not in (16, 64):
-        raise ValueError(f"anf_hop_summary: unsupported m={m}")
-    ex_fn = hll16_register_exprs if m == 16 else hll64_register_exprs
     sym = _sym_edges(edges, a_col, b_col).localCheckpoint()
     nodes = sym.select(F.col("src").alias("node")).distinct()
-    ex = ex_fn("concat(CAST(node AS STRING), ':anf')")
+    ex = hll_register_exprs("concat(CAST(node AS STRING), ':anf')", m)
     base = nodes.select(
         "node",
-        F.expr(ex["bucket_hex"]).alias("_bh"),
+        F.expr(f"CAST({ex['bucket']} AS INT)").alias("_bidx"),
         F.expr(ex["rho"]).alias("_rho"),
     )
-    if m == 16:
-        bidx = "instr('0123456789abcdef', _bh) - 1"
-    else:
-        bidx = (
-            "(instr('0123456789abcdef', substring(_bh, 1, 1)) - 1) * 4"
-            " + CAST(substring(_bh, 2, 1) AS INT)"
-        )
-    base = base.select("node", F.expr(f"CAST({bidx} AS INT)").alias("_bidx"), "_rho")
     rcols = [f"r{j}" for j in range(m)]
     cur = base.select(
         "node",
@@ -772,10 +758,9 @@ def anf_hop_summary(
         )
         snaps.append(cur.withColumn("hop", F.lit(h).cast("bigint")))
     s_int = " + ".join(
-        f"IF(r{j} > 0, shiftleft(CAST(1 AS BIGINT), 49 - r{j}), CAST(0 AS BIGINT))"
-        for j in range(m)
+        f"IF({r} > 0, {hll_term(r)}, CAST(0 AS BIGINT))" for r in rcols
     )
-    n_regs = " + ".join(f"IF(r{j} > 0, 1, 0)" for j in range(m))
+    n_regs = " + ".join(f"IF({r} > 0, 1, 0)" for r in rcols)
     return reduce(lambda x, y: x.unionByName(y), snaps).select(
         "hop",
         "node",

@@ -1,12 +1,20 @@
 """Similarity search over embedding columns (`array<float>`).
 
-Two tiers:
-- brute-force cosine top-k — the exact baseline, a broadcast
+Five top-k operators, one exact baseline and four scale paths:
+- `cosine_topk_bruteforce` — exact cosine top-k, a broadcast
   nested-loop over the (small) query set: the corpus is scanned ONCE,
   never shuffled, so it scales linearly with corpus size;
-- random-hyperplane LSH bucketing — the approximate scale path: each
-  vector maps to a bit-bucket, candidate generation is an equi-join on
-  the bucket (one shuffle, no O(n²)).
+- `quantized_topk` — the brute-force scan over int8 scalar-quantized
+  codes (4× smaller than float32), scored by exact integer dot
+  products;
+- `ivf_topk` — IVF ANN over KMeans cells: each query scans only its
+  `n_probe` nearest cells; each corpus vector is indexed under its
+  `spill` nearest;
+- `ivf_fixed_topk` — IVF ANN over deterministic hyperplane-sign cells
+  probed in query-directed order (no training, SQL-expressible);
+- `ann_lsh_topk` — random-hyperplane LSH bucketing with multi-probe:
+  candidate generation is an equi-join on the bucket (one shuffle, no
+  O(n²)).
 
 All vector math is JVM-side (`zip_with` dot product + `aggregate`
 sums); no Python in the hot path. The hyperplanes are pseudo-random but

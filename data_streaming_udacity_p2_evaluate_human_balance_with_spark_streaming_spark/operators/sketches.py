@@ -105,107 +105,115 @@ def heavy_hitters(
 
 
 # --------------------------------------------------------------------------
-# Portable HyperLogLog: md5-register construction both engines replay
-# byte-for-byte, with EXACT-INTEGER register sums (no fp summation-order
-# divergence), so even the estimate is oracle-comparable.
+# Portable HyperLogLog: the one home of the register format and the
+# estimator. Both are SQL text that Spark and DuckDB evaluate
+# identically, so every operator, registry query and DuckDB oracle that
+# counts distinct keys with an HLL builds on the fragments below. Register
+# sums are EXACT integers (no fp summation-order divergence), so even the
+# estimate is oracle-comparable. m = 256 serves the group sketches
+# (hll_estimate, the merge, sliding windows); m = 16 and 64 serve the
+# per-node ANF hop sketches (operators/graphs.py), where one sketch per
+# node keeps register rows at m·|V|.
 # --------------------------------------------------------------------------
 
-#: p=8 → 256 registers; rho drawn from the next 48 bits of the md5.
+#: default register count (σ ≈ 1.04/√m ≈ 6.5%).
 HLL_M = 256
-_HLL_W_HEX = 12  # 48 bits of rho-stream
-_HLL_RHO_MAX = 4 * _HLL_W_HEX + 1  # all-zero stream
-#: alpha_256 (Flajolet et al. 2007): 0.7213/(1 + 1.079/m). Emitted as a
-#: literal so Spark and DuckDB fold the identical double.
-HLL_ALPHA = 0.7213 / (1 + 1.079 / HLL_M)
+#: rho is read from the 12 hex chars (48 bits) after the bucket chars:
+#: rho ∈ [1, 49], 49 for an all-zero stream, so every register term
+#: 2^(49 − rho) and any sum of m ≤ 256 of them fits a BIGINT.
+_RHO_HEX = 12
+_RHO_MAX = 4 * _RHO_HEX + 1
+_HEX = "0123456789abcdef"
+#: alpha_m (Flajolet et al. 2007): the small-m constants for 16 and 64,
+#: 0.7213/(1 + 1.079/m) for 256. Emitted as literals cast to DOUBLE so
+#: Spark and DuckDB fold the identical double.
+_ALPHA = {16: 0.673, 64: 0.709, 256: 0.7213 / (1 + 1.079 / 256)}
 
 
-#: m=16 variant for PER-NODE sketches (ANF hop sets): 16 registers per
-#: node keeps register-table rows at 16·|V| instead of 256·|V| — the
-#: per-entity-sketch regime where thousands of sketches coexist and
-#: per-sketch accuracy (~26% σ) is certified in-query instead of
-#: engineered down. alpha_16 = 0.673 (Flajolet et al. 2007, small-m
-#: empirical constant).
-_HLL16_W_HEX = 12
-HLL16_RHO_MAX = 4 * _HLL16_W_HEX + 1
+def _nibble(ch_sql: str) -> str:
+    return f"(instr('{_HEX}', {ch_sql}) - 1)"
 
 
-def hll16_register_exprs(key_sql: str) -> dict[str, str]:
-    """`hll_register_exprs` with a 1-hex-char bucket (m=16): bucket =
-    first md5 hex char, rho from the next 48 bits. Same pure
-    integer/string construction, valid in Spark AND DuckDB (the
-    caller supplies the string cast per dialect)."""
+def hll_register_exprs(key_sql: str, m: int = HLL_M) -> dict[str, str]:
+    """SQL fragments (valid in Spark AND DuckDB; the caller supplies the
+    string cast of the key per dialect) for the HLL register of one key:
+
+    - `bucket_hex`: the bucket as an md5 hex label — the first char
+      (m=16), the first char plus the second char's top 2 bits as a
+      digit '0'..'3' (m=64), or the first two chars (m=256);
+    - `bucket`: the same bucket as an integer in [0, m);
+    - `rho`: leading zero bits + 1 of the 48-bit stream that starts
+      right after the bucket chars, with pure integer/string ops —
+      `floor(log2(w))` would wobble at power-of-two boundaries.
+
+    Raises ValueError for any other m."""
+    if m not in _ALPHA:
+        raise ValueError(f"hll_register_exprs: unsupported m={m}; use 16, 64 or 256")
     h = f"md5({key_sql})"
-    stripped = f"regexp_replace(substring({h}, 2, {_HLL16_W_HEX}), '^0+', '')"
-    msb = (
-        f"CASE WHEN substring({stripped}, 1, 1) IN ('1') THEN 1 "
-        f"WHEN substring({stripped}, 1, 1) IN ('2','3') THEN 2 "
-        f"WHEN substring({stripped}, 1, 1) IN ('4','5','6','7') THEN 3 "
-        f"ELSE 4 END"
+    first, second = f"substring({h}, 1, 1)", f"substring({h}, 2, 1)"
+    if m == 16:
+        bucket_hex, bucket, rho_at = first, _nibble(first), 2
+    elif m == 64:
+        quad = f"substring('0000111122223333', instr('{_HEX}', {second}), 1)"
+        bucket_hex = f"concat({first}, {quad})"
+        bucket, rho_at = f"{_nibble(first)} * 4 + {_nibble(quad)}", 3
+    else:
+        bucket_hex = f"substring({h}, 1, 2)"
+        bucket, rho_at = f"{_nibble(first)} * 16 + {_nibble(second)}", 3
+    stripped = f"regexp_replace(substring({h}, {rho_at}, {_RHO_HEX}), '^0+', '')"
+    lead = f"substring({stripped}, 1, 1)"
+    lead_zeros = (
+        f"CASE WHEN {lead} = '1' THEN 3 WHEN {lead} IN ('2','3') THEN 2 "
+        f"WHEN {lead} IN ('4','5','6','7') THEN 1 ELSE 0 END"
     )
     rho = (
-        f"CASE WHEN {stripped} = '' THEN {HLL16_RHO_MAX} "
-        f"ELSE 4 * ({_HLL16_W_HEX} - length({stripped})) + (4 - {msb}) + 1 END"
+        f"CASE WHEN {stripped} = '' THEN {_RHO_MAX} "
+        f"ELSE 4 * ({_RHO_HEX} - length({stripped})) + {lead_zeros} + 1 END"
     )
-    return {"bucket_hex": f"substring({h}, 1, 1)", "rho": rho}
+    return {"bucket_hex": bucket_hex, "bucket": bucket, "rho": rho}
 
 
-#: m=64 graduation for per-node sketches (r11 VERDICT #5): σ ≈
-#: 1.04/√64 ≈ 13% per sketch — half the m=16 error at 4× the register
-#: rows, still 64·|V| ≪ 256·|V|. alpha_64 = 0.709 (Flajolet et al.
-#: 2007 small-m constant); linear-counting cutoff 2.5·m = 160.
-HLL64_RHO_MAX = 4 * _HLL16_W_HEX + 1  # rho stream = hex chars 3..14
+def hll_term(rho_sql: str) -> str:
+    """One present register's exact-integer harmonic term 2^(49 − rho)
+    (a BIGINT; `<<` runs in both engines, DuckDB has no shiftleft)."""
+    return f"(CAST(1 AS BIGINT) << ({_RHO_MAX} - {rho_sql}))"
 
 
-def hll64_register_exprs(key_sql: str) -> dict[str, str]:
-    """64-bucket variant, portable across Spark and DuckDB with pure
-    string ops: bucket = first md5 hex char (4 bits) concatenated with
-    the QUADRANT of the second char (its top 2 bits → '0'..'3'), i.e.
-    exactly 6 uniform bits as a 2-char string key; rho = leading-zero
-    count of hex chars 3..14 (independent of both bucket chars — the
-    second char's unused low 2 bits are simply dropped)."""
-    h = f"md5({key_sql})"
-    stripped = f"regexp_replace(substring({h}, 3, {_HLL16_W_HEX}), '^0+', '')"
-    msb = (
-        f"CASE WHEN substring({stripped}, 1, 1) IN ('1') THEN 1 "
-        f"WHEN substring({stripped}, 1, 1) IN ('2','3') THEN 2 "
-        f"WHEN substring({stripped}, 1, 1) IN ('4','5','6','7') THEN 3 "
-        f"ELSE 4 END"
-    )
-    rho = (
-        f"CASE WHEN {stripped} = '' THEN {HLL64_RHO_MAX} "
-        f"ELSE 4 * ({_HLL16_W_HEX} - length({stripped})) + (4 - {msb}) + 1 END"
-    )
-    quad = (
-        f"CASE WHEN substring({h}, 2, 1) IN ('0','1','2','3') THEN '0' "
-        f"WHEN substring({h}, 2, 1) IN ('4','5','6','7') THEN '1' "
-        f"WHEN substring({h}, 2, 1) IN ('8','9','a','b') THEN '2' "
-        f"ELSE '3' END"
-    )
-    return {
-        "bucket_hex": f"concat(substring({h}, 1, 1), {quad})",
-        "rho": rho,
-    }
+#: (s_int, n_regs) select items summarizing the register rows of one
+#: sketch (an aggregate over rows with a `rho` column): s_int = Σ 2^(49 −
+#: rho) over the present registers, n_regs their count.
+HLL_SUMMARY_SQL = (
+    f"CAST(SUM({hll_term('rho')}) AS BIGINT) AS s_int",
+    "CAST(COUNT(*) AS BIGINT) AS n_regs",
+)
 
 
-def hll_register_exprs(key_sql: str) -> dict[str, str]:
-    """SQL fragments (valid in Spark AND DuckDB up to the hex→int cast,
-    which the caller supplies per dialect) for the HLL register of one
-    key: bucket in [0,256) from the first 2 md5 hex chars, rho = leading
-    zero bits of the next 48 + 1, computed with pure integer/string ops
-    — `floor(log2(w))` would wobble at power-of-two boundaries."""
-    h = f"md5({key_sql})"
-    stripped = f"regexp_replace(substring({h}, 3, {_HLL_W_HEX}), '^0+', '')"
-    msb = (
-        f"CASE WHEN substring({stripped}, 1, 1) IN ('1') THEN 1 "
-        f"WHEN substring({stripped}, 1, 1) IN ('2','3') THEN 2 "
-        f"WHEN substring({stripped}, 1, 1) IN ('4','5','6','7') THEN 3 "
-        f"ELSE 4 END"
+def hll_estimate_sql(m: int = HLL_M) -> str:
+    """The distinct-count estimate of one m-register sketch from its
+    summary columns (s_int, n_regs), valid in Spark and DuckDB alike.
+    raw = alpha·m²·2^49 / S' where S' = s_int + (m − n_regs)·2^49 sums
+    2^(49 − M[j]) over ALL m registers: an empty one has M[j] = 0 and
+    contributes 2^49 — omitting it is the classic small-cardinality
+    overestimate. At or below 2.5·m, while a register is still empty,
+    linear counting m·ln(m / empty) replaces raw. Both engines divide
+    the same folded literal by the same exact integer; ln is the only
+    libm call."""
+    scale = 1 << _RHO_MAX
+    raw = (
+        f"((CAST({_ALPHA[m]!r} AS DOUBLE) * {m} * {m} * CAST({scale} AS DOUBLE))"
+        f" / CAST(s_int + ({m} - n_regs) * {scale} AS DOUBLE))"
     )
-    rho = (
-        f"CASE WHEN {stripped} = '' THEN {_HLL_RHO_MAX} "
-        f"ELSE 4 * ({_HLL_W_HEX} - length({stripped})) + (4 - {msb}) + 1 END"
+    return (
+        f"CASE WHEN {raw} <= CAST({5 * m // 2} AS DOUBLE) AND ({m} - n_regs) > 0"
+        f" THEN {m} * ln(CAST({m} AS DOUBLE) / ({m} - n_regs)) ELSE {raw} END"
     )
-    return {"bucket_hex": f"substring({h}, 1, 2)", "rho": rho}
+
+
+#: the estimate rows' value columns, after the group column
+_HLL_OUT = (
+    f"round({hll_estimate_sql()}, 4) AS est_distinct",
+    "n_regs AS n_registers",
+)
 
 
 def hll_registers(df: DataFrame, group_cols: list, key_col: str) -> DataFrame:
@@ -217,7 +225,11 @@ def hll_registers(df: DataFrame, group_cols: list, key_col: str) -> DataFrame:
     per-window distinct-count sketches emit append-finalized with no
     custom state operator, bounded at ≤256 rows per group. Register
     tables merge by a further groupBy(...).max(rho) — the property
-    hll_estimate_from_registers and the streaming twin both lean on."""
+    hll_estimate_from_registers and the streaming twin both lean on.
+
+    Scale shape identical to the CMS: map-side hash aggregation IS the
+    sketch merge; the shuffle carries ≤ 256 registers per group per
+    partition regardless of input rows."""
     e = hll_register_exprs(f"CAST({key_col} AS STRING)")
     # bucket/rho are computed INSIDE the groupBy/agg, with no projection
     # in between: a pre-projection would detach the watermark metadata
@@ -227,201 +239,99 @@ def hll_registers(df: DataFrame, group_cols: list, key_col: str) -> DataFrame:
     ).agg(F.max(F.expr(e["rho"])).alias("rho"))
 
 
+def hll_registers_sql(table: str, group_sql: str, key_col: str) -> str:
+    """DuckDB replica of `hll_registers`: (group, bucket_hex, rho) rows
+    of `table`, `group_sql` being one select item."""
+    e = hll_register_exprs(f"CAST({key_col} AS VARCHAR)")
+    return (
+        f"SELECT {group_sql}, {e['bucket_hex']} AS bucket_hex, "
+        f"MAX({e['rho']}) AS rho FROM {table} GROUP BY 1, 2"
+    )
+
+
 def hll_estimate_from_registers(regs: DataFrame, group_col: str) -> DataFrame:
-    """Finalize a `hll_registers` table into per-group estimates —
-    exactly the arithmetic documented on hll_estimate; factoring it
-    out lets STREAM-EMITTED registers finalize batch-side with
-    bit-identical results to the all-batch path."""
-    m = HLL_M
-    summary = regs.groupBy(group_col).agg(
-        F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), {_HLL_RHO_MAX} - rho)")).alias(
-            "s_int"
-        ),
-        F.count(F.lit(1)).alias("n_regs"),
+    """Finalize a `hll_registers` table into per-group (est_distinct,
+    n_registers) rows with `hll_estimate_sql` rounded to 4 places. Every
+    estimate path ends here, so STREAM-EMITTED registers finalize
+    batch-side bit-identically to the all-batch path."""
+    return (
+        regs.groupBy(group_col)
+        .agg(*[F.expr(s) for s in HLL_SUMMARY_SQL])
+        .select(group_col, *[F.expr(s) for s in _HLL_OUT])
     )
-    numer = f"{HLL_ALPHA!r} * {m} * {m} * CAST(shiftleft(CAST(1 AS BIGINT), {_HLL_RHO_MAX}) AS DOUBLE)"
-    s_all = f"(s_int + ({m} - n_regs) * shiftleft(CAST(1 AS BIGINT), {_HLL_RHO_MAX}))"
-    raw = f"({numer}) / CAST({s_all} AS DOUBLE)"
-    v = f"({m} - n_regs)"
-    est = (
-        f"CASE WHEN {raw} <= 2.5 * {m} AND {v} > 0 "
-        f"THEN {m} * ln(CAST({m} AS DOUBLE) / {v}) ELSE {raw} END"
-    )
-    return summary.select(
-        F.col(group_col),
-        F.expr(f"round({est}, 4)").alias("est_distinct"),
-        F.col("n_regs").cast("long").alias("n_registers"),
+
+
+def hll_estimate_from_registers_sql(regs: str, group_col: str) -> str:
+    """DuckDB replica of `hll_estimate_from_registers` over the register
+    table or CTE `regs`, whose first column is `group_col`."""
+    return (
+        f"SELECT {group_col}, {', '.join(_HLL_OUT)} FROM ("
+        f"SELECT {group_col}, {', '.join(HLL_SUMMARY_SQL)} "
+        f"FROM {regs} GROUP BY 1)"
     )
 
 
 def hll_estimate(df: DataFrame, group_col: str, key_col: str) -> DataFrame:
     """Per-group HLL distinct estimate, fully deterministically:
     registers are max(rho) per (group, bucket); the harmonic-mean
-    denominator is the exact integer Σ 2^(rho_max - rho) (each term ≤
-    2^48, 256 registers → fits bigint), so both engines divide the same
-    literal numerator by the same integer. Small-range correction uses
-    linear counting when the raw estimate ≤ 2.5·m.
-
-    Scale shape identical to the CMS: map-side hash aggregation IS the
-    sketch merge; the shuffle carries ≤ 256 registers per group per
-    partition regardless of input rows."""
-    e = hll_register_exprs(f"CAST({key_col} AS STRING)")
-    regs = (
-        df.select(
-            F.col(group_col),
-            F.expr(e["bucket_hex"]).alias("bucket_hex"),
-            F.expr(e["rho"]).alias("rho"),
-        )
-        .groupBy(group_col, "bucket_hex")
-        .agg(F.max("rho").alias("rho"))
-    )
-    m = HLL_M
-    summary = regs.groupBy(group_col).agg(
-        F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), {_HLL_RHO_MAX} - rho)")).alias(
-            "s_int"
-        ),
-        F.count(F.lit(1)).alias("n_regs"),
-    )
-    # raw = alpha * m^2 * 2^rho_max / S'  where S' = Σ_j 2^(rho_max - M[j])
-    # over ALL m registers: empty ones have M[j]=0 and contribute 2^rho_max
-    # each — omitting them is the classic small-cardinality overestimate.
-    numer = f"{HLL_ALPHA!r} * {m} * {m} * CAST(shiftleft(CAST(1 AS BIGINT), {_HLL_RHO_MAX}) AS DOUBLE)"
-    s_all = f"(s_int + ({m} - n_regs) * shiftleft(CAST(1 AS BIGINT), {_HLL_RHO_MAX}))"
-    raw = f"({numer}) / CAST({s_all} AS DOUBLE)"
-    v = f"({m} - n_regs)"  # empty registers (rho=49 keys are ~impossible)
-    est = (
-        f"CASE WHEN {raw} <= 2.5 * {m} AND {v} > 0 "
-        f"THEN {m} * ln(CAST({m} AS DOUBLE) / {v}) ELSE {raw} END"
-    )
-    return summary.select(
-        F.col(group_col),
-        F.expr(f"round({est}, 4)").alias("est_distinct"),
-        F.col("n_regs").cast("long").alias("n_registers"),
+    denominator is an exact integer, so both engines divide the same
+    literal numerator by the same integer (`hll_estimate_sql`)."""
+    return hll_estimate_from_registers(
+        hll_registers(df, [group_col], key_col), group_col
     )
 
 
 def hll_estimate_oracle_sql(table: str, group_col: str, key_col: str) -> str:
-    """DuckDB replica of `hll_estimate` — identical register math; the
-    only dialect difference is hex→int, which this estimator never
-    needs (buckets stay hex labels, the sum is over shifted integers:
-    DuckDB's `1::BIGINT << n`)."""
-    e = hll_register_exprs(f"CAST({key_col} AS VARCHAR)")
-    m = HLL_M
-    # CAST the alpha literal: DuckDB types bare decimals as DECIMAL and
-    # overflows multiplying by m² — Spark folds it as double either way
-    numer = f"CAST({HLL_ALPHA!r} AS DOUBLE) * {m} * {m} * CAST((1::BIGINT << {_HLL_RHO_MAX}) AS DOUBLE)"
-    s_all = f"(s_int + ({m} - n_regs) * (1::BIGINT << {_HLL_RHO_MAX}))"
-    raw = f"({numer}) / CAST({s_all} AS DOUBLE)"
-    v = f"({m} - n_regs)"
-    est = (
-        f"CASE WHEN {raw} <= 2.5 * {m} AND {v} > 0 "
-        f"THEN {m} * ln(CAST({m} AS DOUBLE) / {v}) ELSE {raw} END"
-    )
+    """DuckDB replica of `hll_estimate` — identical register math; buckets
+    stay hex labels and the sum is over shifted integers, so no hex→int
+    conversion is needed."""
     return f"""
-    WITH regs AS (
-      SELECT {group_col}, {e["bucket_hex"]} AS bucket_hex, MAX({e["rho"]}) AS rho
-      FROM {table} GROUP BY 1, 2
-    ), summary AS (
-      SELECT {group_col},
-        SUM((1::BIGINT << ({_HLL_RHO_MAX} - rho)))::BIGINT AS s_int,
-        COUNT(*) AS n_regs
-      FROM regs GROUP BY 1
-    )
-    SELECT {group_col}, round({est}, 4) AS est_distinct,
-           CAST(n_regs AS BIGINT) AS n_registers
-    FROM summary
+    WITH regs AS ({hll_registers_sql(table, group_col, key_col)})
+    {hll_estimate_from_registers_sql("regs", group_col)}
     """
-
-
-def _hll_summary_estimate(regs: DataFrame, group_col: str) -> DataFrame:
-    """Registers → estimate (shared by hll_estimate and the merge path):
-    exact-integer harmonic denominator, linear-counting small-range
-    correction — see hll_estimate."""
-    m = HLL_M
-    summary = regs.groupBy(group_col).agg(
-        F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), {_HLL_RHO_MAX} - rho)")).alias(
-            "s_int"
-        ),
-        F.count(F.lit(1)).alias("n_regs"),
-    )
-    numer = f"{HLL_ALPHA!r} * {m} * {m} * CAST(shiftleft(CAST(1 AS BIGINT), {_HLL_RHO_MAX}) AS DOUBLE)"
-    s_all = f"(s_int + ({m} - n_regs) * shiftleft(CAST(1 AS BIGINT), {_HLL_RHO_MAX}))"
-    raw = f"({numer}) / CAST({s_all} AS DOUBLE)"
-    v = f"({m} - n_regs)"
-    est = (
-        f"CASE WHEN {raw} <= 2.5 * {m} AND {v} > 0 "
-        f"THEN {m} * ln(CAST({m} AS DOUBLE) / {v}) ELSE {raw} END"
-    )
-    return summary.select(
-        F.col(group_col),
-        F.expr(f"round({est}, 4)").alias("est_distinct"),
-        F.col("n_regs").cast("long").alias("n_registers"),
-    )
 
 
 def hll_merge_estimate(
     df: DataFrame, group_col: str, key_col: str, all_label: str = "ALL"
 ) -> DataFrame:
     """Per-group HLL estimates PLUS the merged-sketch global row: the
-    `all_label` group's registers are the per-bucket MAX over every
+    `all_label` row's registers are the per-bucket MAX over every
     group's registers — the sketch-union operation — not a rescan of
     the raw keys. This is the property that makes HLL usable at 100 TB:
     per-partition/per-day sketches (256 registers each) merge
     associatively into exact-union estimates without touching raw data
     again; the oracle replays the identical merge, putting MERGE
     semantics themselves under the value gate (a pytest additionally
-    pins merged == direct-global-scan estimate)."""
-    e = hll_register_exprs(f"CAST({key_col} AS STRING)")
-    regs = (
-        df.select(
-            F.col(group_col).cast("string").alias(group_col),
-            F.expr(e["bucket_hex"]).alias("bucket_hex"),
-            F.expr(e["rho"]).alias("rho"),
-        )
-        .groupBy(group_col, "bucket_hex")
-        .agg(F.max("rho").alias("rho"))
-    )
+    pins merged == direct-global-scan estimate). The merged registers
+    are summarized on their own, so a real group named `all_label`
+    keeps its own row instead of being summed into the merged one."""
+    group = F.col(group_col).cast("string").alias(group_col)
+    regs = hll_registers(df, [group], key_col)
     merged = (
         regs.groupBy("bucket_hex")
         .agg(F.max("rho").alias("rho"))
         .select(F.lit(all_label).alias(group_col), "bucket_hex", "rho")
     )
-    return _hll_summary_estimate(regs.unionByName(merged), group_col)
+    return hll_estimate_from_registers(regs, group_col).unionByName(
+        hll_estimate_from_registers(merged, group_col)
+    )
 
 
 def hll_merge_oracle_sql(
     table: str, group_col: str, key_col: str, all_label: str = "ALL"
 ) -> str:
-    """DuckDB replica of `hll_merge_estimate` (same register math as
-    hll_estimate_oracle_sql plus the per-bucket max merge)."""
-    e = hll_register_exprs(f"CAST({key_col} AS VARCHAR)")
-    m = HLL_M
-    numer = f"CAST({HLL_ALPHA!r} AS DOUBLE) * {m} * {m} * CAST((1::BIGINT << {_HLL_RHO_MAX}) AS DOUBLE)"
-    s_all = f"(s_int + ({m} - n_regs) * (1::BIGINT << {_HLL_RHO_MAX}))"
-    raw = f"({numer}) / CAST({s_all} AS DOUBLE)"
-    v = f"({m} - n_regs)"
-    est = (
-        f"CASE WHEN {raw} <= 2.5 * {m} AND {v} > 0 "
-        f"THEN {m} * ln(CAST({m} AS DOUBLE) / {v}) ELSE {raw} END"
+    """DuckDB replica of `hll_merge_estimate`."""
+    regs = hll_registers_sql(
+        table, f"CAST({group_col} AS VARCHAR) AS {group_col}", key_col
     )
     return f"""
-    WITH regs AS (
-      SELECT CAST({group_col} AS VARCHAR) AS {group_col},
-             {e["bucket_hex"]} AS bucket_hex, MAX({e["rho"]}) AS rho
-      FROM {table} GROUP BY 1, 2
-    ), with_merged AS (
-      SELECT * FROM regs
-      UNION ALL
-      SELECT '{all_label}', bucket_hex, MAX(rho) FROM regs GROUP BY 2
-    ), summary AS (
-      SELECT {group_col},
-        SUM((1::BIGINT << ({_HLL_RHO_MAX} - rho)))::BIGINT AS s_int,
-        COUNT(*) AS n_regs
-      FROM with_merged GROUP BY 1
+    WITH regs AS ({regs}), merged AS (
+      SELECT '{all_label}' AS {group_col}, bucket_hex, MAX(rho) AS rho
+      FROM regs GROUP BY 2
     )
-    SELECT {group_col}, round({est}, 4) AS est_distinct,
-           CAST(n_regs AS BIGINT) AS n_registers
-    FROM summary
+    {hll_estimate_from_registers_sql("regs", group_col)}
+    UNION ALL
+    {hll_estimate_from_registers_sql("merged", group_col)}
     """
 
 

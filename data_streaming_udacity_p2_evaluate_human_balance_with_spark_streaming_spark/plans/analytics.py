@@ -6553,50 +6553,26 @@ def q_cart_abandonment_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _hll_sliding_oracle() -> str:
     from ..operators.sketches import (
-        HLL_ALPHA,
-        HLL_M,
-        _HLL_RHO_MAX,
-        hll_register_exprs,
+        hll_estimate_from_registers_sql,
+        hll_registers_sql,
     )
 
-    e = hll_register_exprs("CAST(user_id AS VARCHAR)")
-    m = HLL_M
-    numer = (
-        f"CAST({HLL_ALPHA!r} AS DOUBLE) * {m} * {m} * "
-        f"CAST((1::BIGINT << {_HLL_RHO_MAX}) AS DOUBLE)"
-    )
-    s_all = f"(s_int + ({m} - n_regs) * (1::BIGINT << {_HLL_RHO_MAX}))"
-    raw = f"({numer}) / CAST({s_all} AS DOUBLE)"
-    v = f"({m} - n_regs)"
-    est = (
-        f"CASE WHEN {raw} <= 2.5 * {m} AND {v} > 0 "
-        f"THEN {m} * ln(CAST({m} AS DOUBLE) / {v}) ELSE {raw} END"
+    regs = hll_registers_sql(
+        "events", "CAST(date_trunc('day', ts) AS DATE) AS day", "user_id"
     )
     return f"""
-    WITH regs AS (
-      SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-        {e["bucket_hex"]} AS bucket_hex, MAX({e["rho"]}) AS rho
-      FROM events GROUP BY 1, 2
-    ),
+    WITH regs AS ({regs}),
     days AS (SELECT DISTINCT day FROM regs),
     spread AS (
       SELECT regs.day + CAST(o AS INTEGER) AS wd, bucket_hex, rho
       FROM regs, range(0, 7) AS t(o)
     ),
     win AS (
-      SELECT wd, bucket_hex, MAX(rho) AS rho
+      SELECT wd AS day, bucket_hex, MAX(rho) AS rho
       FROM spread JOIN days ON spread.wd = days.day
       GROUP BY wd, bucket_hex
-    ),
-    summary AS (
-      SELECT wd AS day,
-        SUM((1::BIGINT << ({_HLL_RHO_MAX} - rho)))::BIGINT AS s_int,
-        COUNT(*) AS n_regs
-      FROM win GROUP BY 1
     )
-    SELECT day, round({est}, 4) AS est_distinct,
-      CAST(n_regs AS BIGINT) AS n_registers
-    FROM summary
+    {hll_estimate_from_registers_sql("win", "day")}
     """
 
 
@@ -6618,7 +6594,7 @@ def q_hll_sliding_7day_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side max partials), a 7× register fan-out (≤ 7·256 rows per
     day), a (window-day, bucket) max aggregate, and a |days|-row
     estimate projection."""
-    from ..operators.sketches import _hll_summary_estimate, hll_registers
+    from ..operators.sketches import hll_estimate_from_registers, hll_registers
 
     ev = load_table(spark, sf_dir, "events").select(
         F.date_trunc("day", "ts").cast("date").alias("day"), "user_id"
@@ -6642,7 +6618,7 @@ def q_hll_sliding_7day_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("wd", "bucket_hex")
         .agg(F.max("rho").alias("rho"))
     )
-    return _hll_summary_estimate(
+    return hll_estimate_from_registers(
         win.withColumnRenamed("wd", "day"), "day"
     )
 

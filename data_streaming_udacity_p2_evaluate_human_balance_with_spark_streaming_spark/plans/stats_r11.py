@@ -26,46 +26,20 @@ _ANF_SEEDS = 4
 #: non-trivial ball — 0.5 certifies with margin)
 _ANF_ERR_BOUND = 0.5
 
-#: shared (Spark ∩ DuckDB) estimate arithmetic over a summary row
-#: (s_int BIGINT, n_regs BIGINT) for the m=16 register table: one IEEE
-#: division of exact integers by folded literals; the linear-counting
-#: branch is the only libm call (ln of one of 15 rational values — the
-#: cross-engine ln discipline proven by the m=256 HLL family).
-_EST16 = (
-    "CASE WHEN ((CAST(0.673 AS DOUBLE) * 16 * 16"
-    " * CAST(562949953421312 AS DOUBLE))"
-    " / CAST(s_int + (16 - n_regs) * 562949953421312 AS DOUBLE))"
-    " <= CAST(40 AS DOUBLE)"
-    " AND (16 - n_regs) > 0"
-    " THEN 16 * ln(CAST(16 AS DOUBLE) / (16 - n_regs))"
-    " ELSE ((CAST(0.673 AS DOUBLE) * 16 * 16"
-    " * CAST(562949953421312 AS DOUBLE))"
-    " / CAST(s_int + (16 - n_regs) * 562949953421312 AS DOUBLE)) END"
-)
-_TERM_FP16 = f"CAST(floor(({_EST16}) * 1000000.0) AS BIGINT)"
-
-#: m=64 graduation (r11 VERDICT #5): alpha_64 = 0.709, linear-counting
-#: cutoff 2.5·64 = 160; same 2^49 rho scale (rho stream is still 12
-#: hex chars), so s_int arithmetic is unchanged.
-_EST64 = (
-    "CASE WHEN ((CAST(0.709 AS DOUBLE) * 64 * 64"
-    " * CAST(562949953421312 AS DOUBLE))"
-    " / CAST(s_int + (64 - n_regs) * 562949953421312 AS DOUBLE))"
-    " <= CAST(160 AS DOUBLE)"
-    " AND (64 - n_regs) > 0"
-    " THEN 64 * ln(CAST(64 AS DOUBLE) / (64 - n_regs))"
-    " ELSE ((CAST(0.709 AS DOUBLE) * 64 * 64"
-    " * CAST(562949953421312 AS DOUBLE))"
-    " / CAST(s_int + (64 - n_regs) * 562949953421312 AS DOUBLE)) END"
-)
-_TERM_FP64 = f"CAST(floor(({_EST64}) * 1000000.0) AS BIGINT)"
-
 #: certified bound for the m=64 estimator (σ≈13%/sketch): measured max
 #: summed-seed rel_err across sf0.001/0.01/0.1 and all hops = 0.206
 #: (sf0.01, smallest seed balls of the 0-1 slice; deterministic md5
 #: registers, so the margin cannot drift) — 0.25 certifies, half the
 #: m=16 bound.
 _ANF_ERR_BOUND64 = 0.25
+
+
+def _term_fp(m: int) -> str:
+    """One node's HLL estimate (operators/sketches.py hll_estimate_sql
+    over its (s_int, n_regs) summary) floored to 1e6 fixed point."""
+    from ..operators.sketches import hll_estimate_sql
+
+    return f"CAST(floor(({hll_estimate_sql(m)}) * 1000000.0) AS BIGINT)"
 
 
 def _anf_oracle(m: int = 16, chars: tuple = ("0", "1", "2", "3")) -> str:
@@ -75,16 +49,11 @@ def _anf_oracle(m: int = 16, chars: tuple = ("0", "1", "2", "3")) -> str:
     identical estimate arithmetic, and the same 4-seed exact-BFS
     certificate. m selects the 16- (σ≈26%) or 64-register (σ≈13%)
     construction."""
-    from ..operators.sketches import (
-        hll16_register_exprs,
-        hll64_register_exprs,
-    )
+    from ..operators.sketches import HLL_SUMMARY_SQL, hll_register_exprs
 
     # salted like the operator: the slice filter already consumed
     # md5(node)'s first char, so the sketch must hash differently
-    ex_fn = hll16_register_exprs if m == 16 else hll64_register_exprs
-    ex = ex_fn("concat(CAST(node AS VARCHAR), ':anf')")
-    term_fp = _TERM_FP16 if m == 16 else _TERM_FP64
+    ex = hll_register_exprs("concat(CAST(node AS VARCHAR), ':anf')", m)
     err_bound = _ANF_ERR_BOUND if m == 16 else _ANF_ERR_BOUND64
     chars_sql = ", ".join(f"'{c}'" for c in chars)
     return f"""
@@ -120,13 +89,11 @@ def _anf_oracle(m: int = 16, chars: tuple = ("0", "1", "2", "3")) -> str:
       FROM spread GROUP BY 1, 2, 3
     ),
     summary AS (
-      SELECT hop, node,
-        CAST(SUM(1::BIGINT << CAST(49 - rho AS INT)) AS BIGINT) AS s_int,
-        CAST(COUNT(*) AS BIGINT) AS n_regs
+      SELECT hop, node, {", ".join(HLL_SUMMARY_SQL)}
       FROM regs GROUP BY 1, 2
     ),
     pernode AS (
-      SELECT hop, node, {term_fp} AS term_fp FROM summary
+      SELECT hop, node, {_term_fp(m)} AS term_fp FROM summary
     ),
     nf AS (
       SELECT hop, CAST(SUM(term_fp) AS BIGINT) AS nf_fp FROM pernode
@@ -179,9 +146,11 @@ def q_anf_hop_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANF/HyperANF neighborhood function over the sampled co-purchase
     graph (VERDICT r10 #6): NF(h) = Σ_v |B(v, h)| estimated from
     per-node 16-register HLL hop sketches advanced by the sketch-union
-    recurrence (operators/graphs.anf_hop_registers) — the 100 TB
+    recurrence on the packed layout of operators/graphs.anf_hop_summary
+    (one row per node, one rho column per register) — the 100 TB
     graduation the effective_diameter_copurchase docstring names:
-    state is 16·|V| rows per hop however dense the balls get, where
+    state is |V| rows of 16 registers per hop however dense the balls
+    get, where
     the exact histogram's Σ|B(v,h)| reaches |V|² by hop 3 on a
     small-world graph.
 
@@ -194,17 +163,20 @@ def q_anf_hop_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     engineered down).
 
     Exactness: registers are pure md5 string/integer ops; per-hop
-    per-node s_int is an exact Σ 2^(49−ρ) BIGINT; the estimate is one
-    IEEE division by folded literals (the linear-counting branch's ln
-    is the proven cross-engine libm call of the m=256 HLL family);
+    per-node s_int is an exact Σ 2^(49−ρ) BIGINT; the estimate
+    (operators/sketches.py hll_estimate_sql, shared with the m=256
+    family) is one IEEE division by folded literals (the
+    linear-counting branch's ln is the only libm call);
     per-node terms floor to 1e6 fixed point BEFORE the cross-row sum,
     so NF totals are associative integers in both engines.
 
-    Scale shape: one hop = one keyed join (edges ⋈ registers) + one
-    (node, bucket) max hash-agg; estimates are a |V|-row projection
-    per hop; the certificate costs 4 frontier BFS runs. The oracle
-    replays registers through a self-loop-closed recursive CTE and
-    the identical estimate arithmetic."""
+    Scale shape: one hop = one keyed join (edges ⋈ packed rows) + one
+    node-keyed hash-agg taking the max of each of the 16 rho columns;
+    estimates are a |V|-row projection per hop; the certificate costs
+    4 frontier BFS runs. The oracle replays unpacked (node, bucket)
+    registers through a self-loop-closed recursive CTE and the
+    identical estimate arithmetic (anf_hop_summary is pytest-pinned
+    equal to the unpacked anf_hop_registers form)."""
     return _anf_query(spark, sf_dir, m=16)
 
 
@@ -219,7 +191,7 @@ def q_anf_hop_histogram_m64(spark: SparkSession, sf_dir: str) -> DataFrame:
     m=16; deterministic registers, so the margin holds exactly).
     Bucket portability: 6 uniform bits as first-hex-char +
     second-char-quadrant strings (operators/sketches.py
-    hll64_register_exprs) — pure string ops in both engines. Runs on
+    hll_register_exprs with m=64) — pure string ops in both engines. Runs on
     the md5-first-char 0-1 part slice (half the m=16 query's graph):
     the certificate grades ESTIMATOR accuracy, which is
     graph-size-independent, and 64 registers on the full slice would
@@ -235,7 +207,6 @@ def _anf_query(
 ) -> DataFrame:
     from ..operators.graphs import anf_hop_summary, bfs_hops_tagged
 
-    term_fp = _TERM_FP16 if m == 16 else _TERM_FP64
     err_bound = _ANF_ERR_BOUND if m == 16 else _ANF_ERR_BOUND64
 
     e = copurchase_edges(
@@ -246,7 +217,7 @@ def _anf_query(
     # per hop (pytest-pinned equal to the anf_hop_registers form)
     summary = anf_hop_summary(e, _ANF_HOPS, m=m)
     pernode = summary.select(
-        "hop", "node", F.expr(term_fp).alias("term_fp")
+        "hop", "node", F.expr(_term_fp(m)).alias("term_fp")
     ).localCheckpoint()
     nf = pernode.groupBy("hop").agg(F.sum("term_fp").alias("nf_fp"))
 

@@ -621,6 +621,145 @@ def test_hll_merge_equals_direct_global_estimate(spark):
     assert set(merged) == {"0", "1", "2", "3", "ALL"}
 
 
+def test_hll_merge_keeps_real_all_group(spark, duck):
+    """A real group named like `all_label` keeps its own row: the merged
+    registers are summarized on their own, not summed together with the
+    per-group registers of a group called 'ALL'. Each per-group row
+    equals hll_estimate on that group alone, the merged row equals
+    hll_estimate over every key, and the DuckDB oracle returns the same
+    rows."""
+    import pyspark.sql.functions as F
+
+    from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.operators.sketches import (
+        hll_estimate,
+        hll_merge_estimate,
+        hll_merge_oracle_sql,
+    )
+
+    df = spark.range(5_000).select(
+        F.when(F.col("id") % 2 == 0, "ALL").otherwise("b").alias("g"),
+        F.col("id").alias("k"),
+    )
+
+    def rows(frame):
+        return [(r.g, r.est_distinct, r.n_registers) for r in frame.collect()]
+
+    want = rows(hll_estimate(df.filter(F.col("g") == "ALL"), "g", "k"))
+    want += rows(hll_estimate(df.filter(F.col("g") == "b"), "g", "k"))
+    want += rows(hll_estimate(df.withColumn("g", F.lit("ALL")), "g", "k"))
+    got = rows(hll_merge_estimate(df, "g", "k"))
+    assert sorted(got) == sorted(want), (got, want)
+
+    duck.execute(
+        "CREATE OR REPLACE TEMP TABLE hll_all_groups AS "
+        "SELECT CASE WHEN i % 2 = 0 THEN 'ALL' ELSE 'b' END AS g, i AS k "
+        "FROM range(5000) t(i)"
+    )
+    oracle = duck.execute(hll_merge_oracle_sql("hll_all_groups", "g", "k")).fetchall()
+    assert sorted(oracle) == sorted(want), (oracle, want)
+
+
+def test_hll_fragments_agree_across_dialects(spark, duck):
+    """The shared HLL SQL text gives the same answers in both engines:
+    for m = 16, 64 and 256 the (bucket_hex, bucket, rho) of 3,000 keys
+    match between Spark, DuckDB and a pure-Python md5 replica, and the
+    integer buckets cover [0, m); the estimator returns bit-identical
+    doubles over a (s_int, n_regs) grid that reaches both the
+    linear-counting and the raw branch; any other m is rejected."""
+    import hashlib
+    import math
+
+    from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.operators.sketches import (
+        hll_estimate_sql,
+        hll_register_exprs,
+    )
+
+    n_keys = 3_000
+
+    def py_register(key, m):
+        h = hashlib.md5(str(key).encode()).hexdigest()
+        if m == 16:
+            bucket_hex, bucket, stream = h[0], int(h[0], 16), h[1:13]
+        elif m == 64:
+            q = int(h[1], 16) // 4
+            bucket_hex, bucket, stream = h[0] + str(q), int(h[0], 16) * 4 + q, h[2:14]
+        else:
+            bucket_hex, bucket, stream = h[:2], int(h[:2], 16), h[2:14]
+        bits = int(stream, 16)
+        return bucket_hex, bucket, 48 - bits.bit_length() + 1
+
+    for m in (16, 64, 256):
+        sx = hll_register_exprs("CAST(id AS STRING)", m)
+        spark_regs = sorted(
+            tuple(r)
+            for r in spark.range(n_keys)
+            .selectExpr("id", sx["bucket_hex"], f"CAST({sx['bucket']} AS BIGINT)", sx["rho"])
+            .collect()
+        )
+        dx = hll_register_exprs("CAST(i AS VARCHAR)", m)
+        duck_regs = sorted(
+            duck.execute(
+                f"SELECT i, {dx['bucket_hex']}, CAST({dx['bucket']} AS BIGINT), "
+                f"CAST({dx['rho']} AS BIGINT) FROM range({n_keys}) t(i)"
+            ).fetchall()
+        )
+        py_regs = [(k, *py_register(k, m)) for k in range(n_keys)]
+        assert spark_regs == duck_regs == py_regs, f"m={m}: registers diverged"
+        assert {r[2] for r in py_regs} == set(range(m)), f"m={m}: buckets not covered"
+
+        grid = [(0, 0)] + [
+            (n * (1 << (49 - rho)), n)
+            for n in (1, m // 4, m // 2, m - 1, m)
+            for rho in (1, 2, 3, 6, 10, 49)
+        ]
+        est = hll_estimate_sql(m)
+        spark_est = [
+            r[0]
+            for r in spark.createDataFrame(grid, "s_int bigint, n_regs bigint")
+            .selectExpr(est)
+            .collect()
+        ]
+        values = ", ".join(f"({s}::BIGINT, {n}::BIGINT)" for s, n in grid)
+        duck_est = [
+            r[0]
+            for r in duck.execute(
+                f"SELECT {est} FROM (VALUES {values}) t(s_int, n_regs)"
+            ).fetchall()
+        ]
+        assert [x.hex() for x in spark_est] == [x.hex() for x in duck_est], f"m={m}"
+        # both sides of the 2.5·m cutoff: linear counting m·ln(m/empty)
+        # on an empty and a half-full sketch, raw far above the cutoff
+        at = dict(zip(grid, spark_est))
+        assert at[(0, 0)] == 0.0
+        assert math.isclose(at[((m // 2) << 48, m // 2)], m * math.log(2))
+        assert at[(m << 39, m)] > 300 * m
+
+    with pytest.raises(ValueError, match="m=32"):
+        hll_register_exprs("k", 32)
+
+
+def test_hll_format_lives_in_sketches():
+    """Only operators/sketches.py spells out the HLL format — the 2^49
+    rho scale, the small-m alpha constants, the register term — so the
+    Spark operators and their DuckDB oracles cannot drift apart."""
+    import glob
+    import os
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark",
+    )
+    markers = ("562949953421312", "0.673", "0.709", "49 - r", "49 − r")
+    found = []
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        if path.endswith(os.path.join("operators", "sketches.py")):
+            continue
+        with open(path, encoding="utf-8") as fh:
+            text = fh.read()
+        found += [(os.path.relpath(path, pkg), m) for m in markers if m in text]
+    assert not found, found
+
+
 def test_domain_cap_scale_twin_equals_window_form(spark):
     """The salted two-phase top-K must select EXACTLY the same
     (doc_id, source, rn) rows as the single-window form."""
@@ -1909,7 +2048,7 @@ def test_anf_hop_registers_match_exact_ball_union(spark):
     """anf_hop_registers on a 5-node path graph must equal, at every
     hop, the per-bucket MAX rho over the EXACT ≤h-hop ball of each
     node — verified against a pure-Python md5 replica of the salted
-    m=16 register construction (hll16_register_exprs)."""
+    m=16 register construction (hll_register_exprs with m=16)."""
     import hashlib
 
     from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.operators.graphs import (
