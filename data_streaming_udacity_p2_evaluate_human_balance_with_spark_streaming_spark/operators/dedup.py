@@ -1112,11 +1112,12 @@ def semantic_index(
     compares 1e6·qdot² against t²·n2a·n2b with qdot ≤ 127²·dim, so
     1e6·(127²·dim)² must stay < 2⁶³ — true only for dim ≤ 188.
     Beyond that the product silently wraps BIGINT under ANSI-off;
-    raise instead (mirrors the pagerank_integer overflow guard)."""
+    raise instead (mirrors the pagerank_integer overflow guard). An
+    empty corpus has no dim to check and gives an empty index."""
     from ..functions.vectors import hyperplane_bucket, infer_dim
 
     dim = infer_dim(corpus, vec_col)
-    if 1_000_000 * (127 * 127 * dim) ** 2 >= 2**63:
+    if dim is not None and 1_000_000 * (127 * 127 * dim) ** 2 >= 2**63:
         raise ValueError(
             f"semantic_index: embedding dim {dim} > 188 overflows the "
             "int64 divisionless cosine comparison (1e6*qdot^2); "

@@ -134,6 +134,21 @@ def _nibble(ch_sql: str) -> str:
     return f"(instr('{_HEX}', {ch_sql}) - 1)"
 
 
+def hex_prefix_int(hex_sql: str, n: int) -> str:
+    """The exact BIGINT value of the first `n` (1 to 15) chars of a
+    lowercase hex string such as an md5 digest, as SQL that Spark and
+    DuckDB run alike (DuckDB has no conv()). Spark-only code may use
+    CAST(conv(substring(h, 1, n), 16, 10) AS BIGINT) for the same value."""
+    if not 1 <= n <= 15:
+        raise ValueError(f"hex_prefix_int: n={n} is outside 1..15")
+    terms = (
+        f"CAST({_nibble(f'substring({hex_sql}, {i + 1}, 1)')} AS BIGINT)"
+        f" * {16 ** (n - 1 - i)}"
+        for i in range(n)
+    )
+    return "(" + " + ".join(terms) + ")"
+
+
 def hll_register_exprs(key_sql: str, m: int = HLL_M) -> dict[str, str]:
     """SQL fragments (valid in Spark AND DuckDB; the caller supplies the
     string cast of the key per dialect) for the HLL register of one key:

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.sketches import hex_prefix_int
 from ..sources.files import load_table
 from .copurchase import copurchase_edges
 from .queries import register
@@ -285,14 +286,9 @@ _THETA_K = 64  # < distinct users/type at every SF -> real truncated-sketch regi
 #: md5-derived uniforms (first 12 hex chars)
 _U_DEN = "281474976710657.0"
 
-#: DuckDB: first-12-hex-chars → exact BIGINT via per-nibble shifts
-#: (DuckDB has no conv(); Spark side uses conv(.., 16, 10))
-_HEX48_DUCK = (
-    "CAST(list_sum(list_transform(range(0, 12), i -> "
-    "CAST(strpos('0123456789abcdef', substr({h}, CAST(i + 1 AS INT), 1))"
-    " - 1 AS BIGINT) * (1::BIGINT << CAST(4 * (11 - i) AS INT))))"
-    " AS BIGINT)"
-)
+#: first 12 hex chars of the digest h as an exact BIGINT (Spark side:
+#: conv(.., 16, 10))
+_H48 = hex_prefix_int("h", 12)
 
 
 @register(
@@ -333,7 +329,7 @@ _HEX48_DUCK = (
         CAST(count(*) AS BIGINT) AS k_used,
         CAST(sum(CASE WHEN sides = 2 THEN 1 ELSE 0 END) AS BIGINT)
           AS sample_inter,
-        CAST(max({_HEX48_DUCK.format(h="h")}) AS BIGINT) AS vk
+        CAST(max({_H48}) AS BIGINT) AS vk
       FROM merged WHERE rk <= {_THETA_K}
       GROUP BY 1, 2
     )
@@ -397,7 +393,7 @@ _ES_K = 50
     keyed AS (
       SELECT doc_id, w,
         CAST(floor(1000000000.0 * ln(
-          CAST({_HEX48_DUCK.format(h="h")} + 1 AS DOUBLE) / {_U_DEN})
+          CAST({_H48} + 1 AS DOUBLE) / {_U_DEN})
           / w) AS BIGINT) AS key_fp
       FROM d
     ),

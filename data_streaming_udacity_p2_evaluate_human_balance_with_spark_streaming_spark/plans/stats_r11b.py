@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.sketches import hex_prefix_int
 from ..sources.files import load_table
 from .copurchase import copurchase_edges
 from .queries import register
@@ -274,13 +275,6 @@ def q_item_item_cosine_parts(
 
 _MG_K = 32
 _MG_BUCKETS = 8
-#: DuckDB 2-hex-char → int (no conv()): per-nibble strpos shifts
-_HEX2_DUCK = (
-    "(CAST(strpos('0123456789abcdef', substr(md5(item), 1, 1)) - 1"
-    " AS BIGINT) * 16"
-    " + CAST(strpos('0123456789abcdef', substr(md5(item), 2, 1)) - 1"
-    " AS BIGINT))"
-)
 
 
 @register(
@@ -293,7 +287,7 @@ _HEX2_DUCK = (
       FROM events
     ),
     counts AS (
-      SELECT {_HEX2_DUCK} % {_MG_BUCKETS} AS bucket, item,
+      SELECT {hex_prefix_int('md5(item)', 2)} % {_MG_BUCKETS} AS bucket, item,
         CAST(count(*) AS BIGINT) AS cnt
       FROM it GROUP BY 1, 2
     ),
@@ -423,7 +417,7 @@ _BOOT_B = 200
     ),
     draw AS (
       SELECT g.b,
-        ({{h48}} % n.n) + 1 AS j
+        ({hex_prefix_int('g.h', 12)} % n.n) + 1 AS j
       FROM grid g CROSS JOIN n
     ),
     boot AS (
@@ -448,12 +442,7 @@ _BOOT_B = 200
     FROM obs o
     JOIN br lo ON lo.rk = {int(_BOOT_B * 0.025) + 1}
     JOIN br hi ON hi.rk = {int(_BOOT_B * 0.975)}
-    """.format(
-        h48="CAST(list_sum(list_transform(range(0, 12), k -> "
-        "CAST(strpos('0123456789abcdef', substr(g.h, CAST(k + 1 AS INT),"
-        " 1)) - 1 AS BIGINT) * (1::BIGINT << CAST(4 * (11 - k) AS INT))))"
-        " AS BIGINT)"
-    ),
+    """,
 )
 def q_bootstrap_mean_ci_daily(
     spark: SparkSession, sf_dir: str
@@ -986,8 +975,7 @@ _SF_B = 200
     flipped AS (
       SELECT b,
         CAST(sum(CASE WHEN
-          CAST(strpos('0123456789abcdef', substr(h, 1, 1)) - 1
-               AS BIGINT) % 2 = 0
+          {hex_prefix_int('h', 1)} % 2 = 0
           THEN d ELSE -d END) AS BIGINT) AS t
       FROM grid GROUP BY 1
     ),

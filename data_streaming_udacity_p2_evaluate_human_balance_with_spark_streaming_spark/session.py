@@ -19,6 +19,16 @@ that matter at scale:
   native Hadoop library the default FileContext manager forks
   ``readlink``/``chmod``/``rm -rf`` for every checkpoint file, and a
   full RocksDB snapshot per commit zips every store every batch
+- a generated-class cache of 1,000 entries instead of Spark's 100: a
+  warm ``curation_batch`` pass cycles through between 101 and 200
+  distinct generated classes in the same order every time, so with 100
+  entries each lookup missed and every pass regenerated, Janino-compiled
+  and re-JITted its plans (about 100 compiles per warm pass; none with 200
+  or 1,000 entries). 1,000 leaves at least 5x headroom over that set.
+  The key is static and JVM-wide: Spark builds the cache once per JVM,
+  at the first code generation, so the first ``get_spark`` of a process
+  decides its size and later sessions (or their ``extra_conf``) cannot
+  resize it
 - with ``SPARK_GRAFT_CPUS`` unset, master and shuffle partitions are
   sized to the cores this process may run on (its CPU affinity)
 """
@@ -78,6 +88,10 @@ def get_spark(
             "changelogCheckpointing.enabled",
             "true",
         )
+        # a curation pass cycles through 101-200 generated classes; at
+        # the default 100 entries each lookup misses and every pass
+        # recompiles them all. Static: sized once per JVM (see above)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # the synthetic events table stores ts as TIMESTAMP(NANOS); Spark
         # has no nanos type — read as long, normalized in sources.files
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

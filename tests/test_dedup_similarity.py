@@ -1765,6 +1765,35 @@ def test_semantic_dedup_dim_overflow_guard(spark):
     spark.catalog.clearCache()
 
 
+def test_semantic_family_empty_corpus(spark):
+    """An empty corpus has no dim for the overflow guard to check: the
+    semantic family returns empty results with its usual schema (it
+    used to raise TypeError on 127 * 127 * None), and a batch probed
+    against an empty index keeps every vector."""
+    from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.operators.dedup import (
+        incremental_semantic_dedup,
+        semantic_dedup,
+        semantic_index,
+    )
+
+    schema = "vec_id bigint, v array<double>"
+    empty = spark.createDataFrame([], schema)
+    one = spark.createDataFrame([(1, [1.0, 0.5])], schema)
+
+    assert semantic_index(empty).collect() == []
+    assert semantic_index(empty).schema == semantic_index(one).schema
+    assert semantic_dedup(empty).collect() == []
+    assert semantic_dedup(empty).schema == semantic_dedup(one).schema
+    index = semantic_index(one)
+    assert incremental_semantic_dedup(index, empty).collect() == []
+    probe = incremental_semantic_dedup(semantic_index(empty), one)
+    assert probe.schema == incremental_semantic_dedup(index, one).schema
+    assert [(r.vec_id, r.dup_of, r.n_matches, r.kept) for r in probe.collect()] == [
+        (1, None, 0, True)
+    ]
+    spark.catalog.clearCache()
+
+
 def test_hits_integer_bipartite_min_iterations_guard(spark):
     """ADVICE r10: iterations=1 used to crash with AttributeError
     (the previous-side frame is never assigned); the operator now

@@ -740,8 +740,9 @@ def test_hll_fragments_agree_across_dialects(spark, duck):
 
 def test_hll_format_lives_in_sketches():
     """Only operators/sketches.py spells out the HLL format — the 2^49
-    rho scale, the small-m alpha constants, the register term — so the
-    Spark operators and their DuckDB oracles cannot drift apart."""
+    rho scale, the small-m alpha constants, the register term — and the
+    hex alphabet behind `hex_prefix_int`, so the Spark operators and
+    their DuckDB oracles cannot drift apart."""
     import glob
     import os
 
@@ -749,7 +750,7 @@ def test_hll_format_lives_in_sketches():
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark",
     )
-    markers = ("562949953421312", "0.673", "0.709", "49 - r", "49 − r")
+    markers = ("562949953421312", "0.673", "0.709", "49 - r", "49 − r", "0123456789abcdef")
     found = []
     for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
         if path.endswith(os.path.join("operators", "sketches.py")):
@@ -758,6 +759,46 @@ def test_hll_format_lives_in_sketches():
             text = fh.read()
         found += [(os.path.relpath(path, pkg), m) for m in markers if m in text]
     assert not found, found
+
+
+def test_hex_prefix_int_agrees_across_dialects(spark, duck):
+    """The one portable hex-to-BIGINT fragment reads the same value in
+    Spark, in DuckDB, through Spark's conv() and in Python for 1, 2, 12
+    and 15 md5 hex chars over 2,000 keys, and rejects other lengths."""
+    import hashlib
+
+    from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.operators.sketches import (
+        hex_prefix_int,
+    )
+
+    n_keys = 2_000
+    for n in (1, 2, 12, 15):
+        spark_vals = sorted(
+            tuple(r)
+            for r in spark.range(n_keys)
+            .selectExpr("md5(CAST(id AS STRING)) AS h", "id")
+            .selectExpr(
+                "id",
+                hex_prefix_int("h", n),
+                f"CAST(conv(substring(h, 1, {n}), 16, 10) AS BIGINT)",
+            )
+            .collect()
+        )
+        duck_vals = sorted(
+            duck.execute(
+                f"SELECT i, {hex_prefix_int('h', n)} FROM "
+                f"(SELECT i, md5(CAST(i AS VARCHAR)) AS h FROM range({n_keys}) t(i))"
+            ).fetchall()
+        )
+        py_vals = [
+            (k, int(hashlib.md5(str(k).encode()).hexdigest()[:n], 16))
+            for k in range(n_keys)
+        ]
+        assert [(k, v) for k, v, _ in spark_vals] == duck_vals == py_vals, f"n={n}"
+        assert all(v == c for _, v, c in spark_vals), f"n={n}: conv() disagrees"
+    for n in (0, 16):
+        with pytest.raises(ValueError, match=f"n={n}"):
+            hex_prefix_int("h", n)
 
 
 def test_domain_cap_scale_twin_equals_window_form(spark):

@@ -105,6 +105,40 @@ def test_get_spark_ships_checkpoint_defaults(spark):
         assert {k: s.conf.get(k) for k in shipped} == shipped
 
 
+def test_codegen_cache_holds_more_than_100_classes(spark):
+    """The session factory ships a 1,000-entry generated-class cache, so
+    a working set above Spark's default 100 entries (a curation pass
+    cycles through 101-200 classes) compiles once per JVM: a second
+    round of 150 queries with distinct generated code recompiles
+    nothing. At 100 entries the round evicts its own classes in order
+    and every query of the second round misses."""
+    from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark import (
+        get_spark,
+    )
+
+    again = get_spark(
+        app_name="stedi-tests",
+        master="local[4]",
+        shuffle_partitions=4,
+        extra_conf={"spark.ui.enabled": "false", "spark.sql.session.timeZone": "UTC"},
+    )
+    for s in (spark, again):
+        assert s.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def one_round():
+        # integer literals are inlined into the generated source, so
+        # each i yields a distinct class
+        for i in range(150):
+            spark.range(8).selectExpr(f"id * {i} + {i} AS x").collect()
+
+    one_round()
+    before = compiles.getCount()
+    one_round()
+    assert compiles.getCount() == before
+
+
 def test_default_cpus_follows_affinity():
     """Without SPARK_GRAFT_CPUS the fallback session is sized to the
     cores this process may run on; the variable still overrides it."""
