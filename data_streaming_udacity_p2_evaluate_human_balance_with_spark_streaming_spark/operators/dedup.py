@@ -37,10 +37,11 @@ def spread(df: DataFrame, col: str) -> DataFrame:
 
     Streaming inputs pass through untouched: `.rdd` is illegal on a
     streaming DataFrame, and micro-batch parallelism is the source's
-    concern. (The `.rdd.getNumPartitions()` probe does force a
-    physical-plan translation at build time — acceptable here because
-    spread() is only ever applied directly to table scans, whose plans
-    are trivial.)"""
+    concern. The `.rdd.getNumPartitions()` probe translates the input's
+    physical plan at build time. On a table scan that is trivial; on an
+    aggregate or join input (the curation benchmark hands the MinHash
+    stage `exact_dedup` output) AQE runs the input's shuffle stages then,
+    as Spark jobs of their own, before the plan that uses them is built."""
     if df.isStreaming:
         return df
     target = df.sparkSession.sparkContext.defaultParallelism

@@ -1,7 +1,11 @@
 """Custom stateful streaming, checkpoint/restart recovery (T8), and
 skew-handling join."""
 
+import base64
+import glob
 import json
+import os
+from collections import Counter
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import _parse_datatype_string
@@ -9,9 +13,15 @@ from pyspark.sql.types import _parse_datatype_string
 from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.operators.joins import (
     salted_join,
 )
+from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.plans import (
+    pipelines,
+)
 from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.sources.memory import (
     json_lines_dir,
     stream_from_rows,
+)
+from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.streaming import (
+    sinks,
 )
 from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.streaming.stateful import (
     running_risk_stats,
@@ -225,142 +235,174 @@ def test_flagship_restart_no_duplicates(spark, tmp_path):
     assert emails == ["a@test.com", "b@test.com"]  # each exactly once
 
 
+JOIN_FORMAT = "spark.sql.streaming.join.stateFormatVersion"
+FORMAT2_STORES = {
+    f"{side}-{kind}"
+    for side in ("left", "right")
+    for kind in ("keyToNumValues", "keyWithIndexToValue")
+}
+
+
+def _b64(s):
+    return base64.b64encode(s.encode()).decode()
+
+
+def _customer(i):
+    """Changefeed record registering customer i (c<i>@test.com)."""
+    element = _b64(
+        json.dumps(
+            {
+                "customerName": f"C{i}",
+                "email": f"c{i}@test.com",
+                "phone": str(i),
+                "birthDay": f"{1950 + i}-01-01",
+            }
+        )
+    )
+    return {
+        "key": _b64("Customer"),
+        "value": json.dumps(
+            {
+                "key": _b64("Customer"),
+                "existType": "NONE",
+                "Ch": False,
+                "Incr": False,
+                "zSetEntries": [{"element": element, "Score": "0.0"}],
+            }
+        ),
+    }
+
+
+def _event(i, score):
+    """Risk event for customer i."""
+    who = f"c{i}@test.com"
+    return {
+        "key": who,
+        "value": json.dumps({"customer": who, "score": str(score), "riskDate": "2020-09-14"}),
+    }
+
+
+class _FlagshipJoin:
+    """The checkpointed flagship stream-stream join over two JSON
+    directories (customers, events) into the parquet sink. Each run
+    drains the files added so far (availableNow), one file per source
+    per micro-batch, in the order they were added."""
+
+    schema = "key string, value string"
+
+    def __init__(self, spark, root):
+        self.spark = spark
+        self.src = {k: str(root / k) for k in ("customers", "events")}
+        for d in self.src.values():
+            os.makedirs(d)
+        self.ckpt, self.out_dir = str(root / "ckpt"), str(root / "out")
+        self.n_files = {"customers": 0, "events": 0}
+
+    def add_file(self, kind, rows):
+        n = self.n_files[kind]
+        path = f"{self.src[kind]}/part-{n:03d}.json"
+        with open(path, "w") as f:
+            for r in rows:
+                f.write(json.dumps(r) + "\n")
+        # one file per trigger, taken in this order
+        os.utime(path, (1700000000 + n,) * 2)
+        self.n_files[kind] += 1
+
+    def run(self):
+        cust, ev = (
+            self.spark.readStream.format("json")
+            .schema(self.schema)
+            .option("maxFilesPerTrigger", "1")
+            .load(self.src[kind])
+            for kind in ("customers", "events")
+        )
+        out = pipelines.flagship_join_as_kafka_value(cust, ev)
+        sinks.to_parquet(
+            out, self.out_dir, checkpoint_dir=self.ckpt, available_now=True
+        ).awaitTermination()
+
+    def landed(self):
+        """Multiset of the `value`s in the sink."""
+        return Counter(r.value for r in self.spark.read.parquet(self.out_dir).collect())
+
+    def twin(self):
+        """Multiset of the batch twin's `value`s over every input file."""
+        read = self.spark.read.schema(self.schema)
+        df = pipelines.flagship_join_as_kafka_value(
+            read.json(self.src["customers"]), read.json(self.src["events"])
+        )
+        return Counter(r.value for r in df.collect())
+
+    def offset_conf(self, batch):
+        """The session conf recorded in `offsets/<batch>` (line 2)."""
+        with open(f"{self.ckpt}/offsets/{batch}") as f:
+            return json.loads(f.read().splitlines()[1])["conf"]
+
+    def stores(self):
+        """Every state store of the join: the directories under
+        `state/0` that hold changelog files."""
+        return sorted(
+            {
+                os.path.dirname(p)
+                for p in glob.glob(f"{self.ckpt}/state/0/**/*.changelog", recursive=True)
+            }
+        )
+
+
 def test_flagship_join_restart_exactly_once(spark, tmp_path):
     """T8, stateful flagship: the checkpointed stream-stream join of
     customers and risk events lands in the parquet sink one file pair
     per micro-batch. After 12 batches the query stops and its last
     `commits/<N>` file is deleted: a crash after batch N ran but
     before it committed. Two restarts from the same checkpoint then
-    add files; the first restores both sides' join state from a RocksDB
-    snapshot plus the changelogs after it (on the shipped defaults) and
-    replays batch N. The landed `value` multiset must equal the batch twin
-    over every input: batch N lands once, and customers stored before
-    a restart still join events that arrive after it."""
-    import base64
-    import glob
-    import os
+    add files; the first restores the join state from a RocksDB
+    snapshot plus the changelogs after it (on the shipped defaults: one
+    store per partition) and replays batch N. The landed `value`
+    multiset must equal the batch twin over every input: batch N lands
+    once, and customers stored before a restart still join events that
+    arrive after it."""
     import time
-    from collections import Counter
 
-    from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.plans import (
-        pipelines,
-    )
-    from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.streaming import (
-        sinks,
-    )
-
-    def b64(s):
-        return base64.b64encode(s.encode()).decode()
-
-    def customer(i):
-        element = b64(
-            json.dumps(
-                {
-                    "customerName": f"C{i}",
-                    "email": f"c{i}@test.com",
-                    "phone": str(i),
-                    "birthDay": f"{1950 + i}-01-01",
-                }
-            )
-        )
-        return {
-            "key": b64("Customer"),
-            "value": json.dumps(
-                {
-                    "key": b64("Customer"),
-                    "existType": "NONE",
-                    "Ch": False,
-                    "Incr": False,
-                    "zSetEntries": [{"element": element, "Score": "0.0"}],
-                }
-            ),
-        }
-
-    def event(i, score):
-        who = f"c{i}@test.com"
-        return {
-            "key": who,
-            "value": json.dumps(
-                {"customer": who, "score": str(score), "riskDate": "2020-09-14"}
-            ),
-        }
-
-    src = {"customers": str(tmp_path / "customers"), "events": str(tmp_path / "events")}
-    for d in src.values():
-        os.makedirs(d)
-    n_files = {"customers": 0, "events": 0}
-
-    def add_file(kind, rows):
-        n = n_files[kind]
-        path = f"{src[kind]}/part-{n:03d}.json"
-        with open(path, "w") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-        # one file per trigger, taken in this order
-        os.utime(path, (1700000000 + n,) * 2)
-        n_files[kind] += 1
-
-    schema = _parse_datatype_string("key string, value string")
-    ckpt, out_dir = str(tmp_path / "ckpt"), str(tmp_path / "out")
-
-    def run_once():
-        cust, ev = (
-            spark.readStream.format("json")
-            .schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(src[kind])
-            for kind in ("customers", "events")
-        )
-        out = pipelines.flagship_join_as_kafka_value(cust, ev)
-        sinks.to_parquet(out, out_dir, checkpoint_dir=ckpt, available_now=True).awaitTermination()
-
+    q = _FlagshipJoin(spark, tmp_path)
     # run 1: customer i arrives in batch i; batch i's events join it,
     # an earlier customer held in state, and nobody
     for i in range(12):
-        add_file("customers", [customer(i)])
-        add_file("events", [event(i, i), event(i // 2, 100 + i), event(99, i)])
-    run_once()
-    commits = sorted(int(f) for f in os.listdir(f"{ckpt}/commits") if f.isdigit())
+        q.add_file("customers", [_customer(i)])
+        q.add_file("events", [_event(i, i), _event(i // 2, 100 + i), _event(99, i)])
+    q.run()
+    commits = sorted(int(f) for f in os.listdir(f"{q.ckpt}/commits") if f.isdigit())
     assert commits == list(range(12)), commits
     # a crash before the commit leaves neither the file nor its checksum
     for name in (f"{commits[-1]}", f".{commits[-1]}.crc"):
-        if os.path.exists(f"{ckpt}/commits/{name}"):
-            os.remove(f"{ckpt}/commits/{name}")
+        if os.path.exists(f"{q.ckpt}/commits/{name}"):
+            os.remove(f"{q.ckpt}/commits/{name}")
     # replaying batch 11 must load state version 11: a snapshot plus the
     # changelogs after it. With changelog checkpointing the snapshot is
     # uploaded by the state store's maintenance task (every 60 s by
     # default), so wait until every store has one.
-    stores = [
-        d
-        for d in glob.glob(f"{ckpt}/state/0/*/*")
-        if os.path.isdir(d) and os.path.basename(os.path.dirname(d)).isdigit()
-    ]
+    stores = q.stores()
+    assert stores == [f"{q.ckpt}/state/0/{p}" for p in range(4)], stores
     deadline = time.monotonic() + 180
     while not all(glob.glob(f"{d}/*.zip") for d in stores) and time.monotonic() < deadline:
         time.sleep(1)
-    assert stores and all(glob.glob(f"{d}/*.zip") for d in stores), stores
+    assert all(glob.glob(f"{d}/*.zip") for d in stores), stores
 
     # run 2: events for customers stored before the crash, a new
     # customer, and a re-emitted customer version (joins twice after)
-    add_file("customers", [customer(12)])
-    add_file("customers", [customer(1)])
-    add_file("events", [event(0, 200), event(11, 201), event(12, 202)])
-    add_file("events", [event(1, 203), event(5, 204)])
-    run_once()
+    q.add_file("customers", [_customer(12)])
+    q.add_file("customers", [_customer(1)])
+    q.add_file("events", [_event(0, 200), _event(11, 201), _event(12, 202)])
+    q.add_file("events", [_event(1, 203), _event(5, 204)])
+    q.run()
 
     # run 3: events for customers from both earlier runs, and one whose
     # customer arrives in this run's batch
-    add_file("customers", [customer(13)])
-    add_file("events", [event(1, 300), event(12, 301), event(13, 302), event(3, 303)])
-    run_once()
+    q.add_file("customers", [_customer(13)])
+    q.add_file("events", [_event(1, 300), _event(12, 301), _event(13, 302), _event(3, 303)])
+    q.run()
 
-    landed = Counter(r.value for r in spark.read.parquet(out_dir).collect())
-    twin = pipelines.flagship_join_as_kafka_value(
-        spark.read.schema(schema).json(src["customers"]),
-        spark.read.schema(schema).json(src["events"]),
-    )
-    expected = Counter(r.value for r in twin.collect())
-    assert landed == expected
+    landed = q.landed()
+    assert landed == q.twin()
     scores = Counter(json.loads(v)["score"] for v in landed.elements())
     # customers from run 1 join events from each later run; the batch
     # replayed after the crash landed once and stored its customer once;
@@ -368,6 +410,81 @@ def test_flagship_join_restart_exactly_once(spark, tmp_path):
     assert scores["200"] == scores["303"] == 1
     assert scores["11"] == scores["201"] == 1
     assert scores["203"] == scores["300"] == 2
+
+
+def test_new_checkpoints_use_one_join_store_per_partition(spark, tmp_path):
+    """A join started on the shipped session records state format 3 in
+    its offset log and keeps its state in one RocksDB store per
+    shuffle partition: the partition directory is the store, with no
+    per-side keyToNumValues/keyWithIndexToValue stores (format 2's
+    four). A session built with perfbench-shaped extra_conf keeps the
+    format."""
+    from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark import (
+        get_spark,
+    )
+
+    q = _FlagshipJoin(spark, tmp_path)
+    for i in range(3):
+        q.add_file("customers", [_customer(i)])
+        q.add_file("events", [_event(i, i), _event(0, 10 + i)])
+    q.run()
+
+    assert q.offset_conf(0)[JOIN_FORMAT] == "3"
+    assert q.stores() == [f"{q.ckpt}/state/0/{p}" for p in range(4)]
+    nested = {os.path.basename(d) for d in glob.glob(f"{q.ckpt}/state/0/*/*")}
+    assert not nested & FORMAT2_STORES, nested
+    assert q.landed() == q.twin()
+
+    again = get_spark(
+        app_name="stedi-tests",
+        master="local[4]",
+        shuffle_partitions=4,
+        extra_conf={
+            "spark.driver.memory": "2g",
+            "spark.local.dir": str(tmp_path / "local"),
+            "spark.driver.extraJavaOptions": "-XX:-UsePerfData",
+        },
+    )
+    assert again.conf.get(JOIN_FORMAT) == "3"
+
+
+def test_format2_checkpoint_restarts_on_format2(spark, tmp_path):
+    """A checkpoint started under join state format 2 (every checkpoint
+    written before format 3 shipped) restarts on the shipped session
+    and stays on format 2: Spark takes the format from the offset log,
+    so the later batches record "2" and write the same four stores per
+    partition. The landed `value` multiset equals the batch twin, and
+    customers stored before the restart join events that arrive after
+    it."""
+    q = _FlagshipJoin(spark, tmp_path)
+    for i in range(4):
+        q.add_file("customers", [_customer(i)])
+        q.add_file("events", [_event(i, i), _event(i // 2, 100 + i)])
+    shipped = spark.conf.get(JOIN_FORMAT)
+    spark.conf.set(JOIN_FORMAT, "2")
+    try:
+        q.run()
+    finally:
+        spark.conf.set(JOIN_FORMAT, shipped)
+    before = q.stores()
+
+    q.add_file("customers", [_customer(4)])
+    q.add_file("events", [_event(0, 200), _event(3, 201), _event(4, 202)])
+    q.add_file("events", [_event(1, 203)])
+    q.run()
+
+    batches = sorted(int(f) for f in os.listdir(f"{q.ckpt}/offsets") if f.isdigit())
+    assert batches == list(range(6)), batches
+    assert [q.offset_conf(b)[JOIN_FORMAT] for b in batches] == ["2"] * 6
+    stores = q.stores()
+    assert stores == before
+    assert stores == sorted(
+        f"{q.ckpt}/state/0/{p}/{s}" for p in range(4) for s in FORMAT2_STORES
+    )
+    landed = q.landed()
+    assert landed == q.twin()
+    scores = Counter(json.loads(v)["score"] for v in landed.elements())
+    assert scores["200"] == scores["201"] == scores["202"] == scores["203"] == 1
 
 
 def test_dedup_guard_suppresses_replays(spark, tmp_path):
