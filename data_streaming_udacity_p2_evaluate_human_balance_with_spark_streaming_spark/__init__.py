@@ -18,8 +18,21 @@ Layout
 - ``plans``      : the reference pipelines composed from operators, plus
   the query registry consumed by ``__spark_entry__``.
 - ``streaming``  : sinks, checkpointing, and a multi-query runner.
+
+Python workers need not import this package: importing it registers the
+whole package with cloudpickle by value, so every function and class it
+defines that a job sends to a worker (pandas UDFs, stateful functions,
+DataSource classes) travels as code. That holds on any session, the
+engine's own or a driver's, from any working directory and on any
+cluster.
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 from .session import get_spark  # noqa: F401
+
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 __all__ = ["get_spark"]

@@ -74,6 +74,25 @@ def plane_weight(p: int, d: int) -> float:
     return (int.from_bytes(h, "big") % 2001 - 1000) / 1000.0
 
 
+def _plane_dot_sql(vec_col: str, p: int, n_dims: int | None) -> str:
+    """SQL text of v · r_p for plane p, the weights a LITERAL array
+    computed here once at plan-build, so the per-row work is a pure
+    float dot product with no per-(row, dim) hashing. `n_dims` bounds
+    the weight array; None means 256 weights sliced to the vector's
+    length (zip_with null-pads the shorter side, which would poison the
+    sum)."""
+    weights = ", ".join(f"{plane_weight(p, d)!r}D" for d in range(n_dims or 256))
+    warr = (
+        f"array({weights})"
+        if n_dims is not None
+        else f"slice(array({weights}), 1, size({vec_col}))"
+    )
+    return (
+        f"aggregate(zip_with({vec_col}, {warr}, "
+        f"(x, w) -> x * w), CAST(0.0 AS DOUBLE), (s, v) -> s + v)"
+    )
+
+
 def hyperplane_bucket(
     vec_col: str,
     n_planes: int = 12,
@@ -82,35 +101,17 @@ def hyperplane_bucket(
 ) -> Column:
     """Random-hyperplane LSH bucket id: bit p = sign(v · r_p), packed
     into a bigint. Weights come from `plane_weight` (deterministic,
-    zero driver-side state to broadcast).
-
-    The plane weights are embedded as LITERAL arrays (computed once at
-    plan-build), so the per-row work is a pure float dot product — no
-    per-(row, dim) hashing. `n_dims` bounds the weight array; default
-    256 covers unknown dims (the zip_with stops at the vector length).
-    `plane_offset` shifts the plane ids, yielding an INDEPENDENT table
-    of planes — the building block for OR-amplified multi-table LSH
-    (operators.dedup.embedding_near_dups).
+    zero driver-side state to broadcast), embedded as literal arrays
+    (`_plane_dot_sql`); `n_dims` bounds the weight array, and the
+    default 256 covers unknown dims. `plane_offset` shifts the plane
+    ids, yielding an INDEPENDENT table of planes — the building block
+    for OR-amplified multi-table LSH (operators.dedup.embedding_near_dups).
     """
-    dims = n_dims or 256
-    bits = []
-    for p in range(n_planes):
-        weights = ", ".join(f"{plane_weight(plane_offset + p, d)!r}D" for d in range(dims))
-        # exact dims: zip directly; unknown dims: slice the weight array
-        # to the vector length (zip_with null-pads the shorter side,
-        # which would poison the sum)
-        warr = (
-            f"array({weights})"
-            if n_dims is not None
-            else f"slice(array({weights}), 1, size({vec_col}))"
-        )
-        plane_dot = (
-            f"aggregate(zip_with({vec_col}, {warr}, "
-            f"(x, w) -> x * w), CAST(0.0 AS DOUBLE), (s, v) -> s + v)"
-        )
-        bits.append(
-            f"CASE WHEN {plane_dot} > 0 THEN shiftleft(CAST(1 AS BIGINT), {p}) ELSE CAST(0 AS BIGINT) END"
-        )
+    bits = [
+        f"CASE WHEN {_plane_dot_sql(vec_col, plane_offset + p, n_dims)} > 0 "
+        f"THEN shiftleft(CAST(1 AS BIGINT), {p}) ELSE CAST(0 AS BIGINT) END"
+        for p in range(n_planes)
+    ]
     return F.expr(" + ".join(bits))
 
 
@@ -127,21 +128,9 @@ def plane_dots(
     query-directed multi-probe (Lv et al., VLDB'07): the planes a query
     sits closest to are the ones most likely to have split it from its
     near neighbors."""
-    dims = n_dims or 256
-    dots_ = []
-    for p in range(n_planes):
-        weights = ", ".join(
-            f"{plane_weight(plane_offset + p, d)!r}D" for d in range(dims)
-        )
-        warr = (
-            f"array({weights})"
-            if n_dims is not None
-            else f"slice(array({weights}), 1, size({vec_col}))"
-        )
-        dots_.append(
-            f"aggregate(zip_with({vec_col}, {warr}, "
-            f"(x, w) -> x * w), CAST(0.0 AS DOUBLE), (s, v) -> s + v)"
-        )
+    dots_ = [
+        _plane_dot_sql(vec_col, plane_offset + p, n_dims) for p in range(n_planes)
+    ]
     return F.expr("array(" + ", ".join(dots_) + ")")
 
 

@@ -1115,7 +1115,12 @@ def semantic_index(
     Beyond that the product silently wraps BIGINT under ANSI-off;
     raise instead (mirrors the pagerank_integer overflow guard). An
     empty corpus has no dim to check and gives an empty index."""
-    from ..functions.vectors import hyperplane_bucket, infer_dim
+    from ..functions.vectors import (
+        hyperplane_bucket,
+        infer_dim,
+        quantize_scale,
+        quantize_vec,
+    )
 
     dim = infer_dim(corpus, vec_col)
     if dim is not None and 1_000_000 * (127 * 127 * dim) ** 2 >= 2**63:
@@ -1129,17 +1134,8 @@ def semantic_index(
         F.col(vec_col).cast("array<double>").alias("_v"),
     ).withColumn("cell", hyperplane_bucket("_v", n_planes, n_dims=dim))
     return (
-        cells.withColumn(
-            "_s",
-            F.expr(
-                "greatest(array_max(transform(_v, x -> abs(x))), 1e-30D)"
-                " / 127.0D"
-            ),
-        )
-        .withColumn(
-            "q",
-            F.expr("transform(_v, x -> CAST(floor(x / _s + 0.5D) AS INT))"),
-        )
+        cells.withColumn("_s", quantize_scale("_v"))
+        .withColumn("q", quantize_vec("_v", "_s"))
         .withColumn(
             "n2",
             F.expr(

@@ -63,6 +63,9 @@ def decode_image(payload: bytes):
     import numpy as np
 
     if payload[:2] == b"P6":
+        # every scan loop is bounded by len(payload): a truncated header
+        # (b'P6 3') or a '#' comment with no trailing newline ends in
+        # int(b'') -> ValueError, never in a loop on b''[0:1]
         pos = 2
         vals: list[int] = []
         while len(vals) < 3:
@@ -127,60 +130,12 @@ def decode_image_stats(mm: DataFrame) -> DataFrame:
     def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        def _decode(payload):
-            # decode_image, inlined contract: shipped by value so
-            # workers don't import the engine package
-            if payload[:2] == b"P6":
-                # every scan loop is bounded by len(payload): a truncated
-                # header (b'P6 3') or a '#' comment with no trailing
-                # newline must raise (int(b'') -> ValueError below), not
-                # spin forever on b''[0:1].isspace() == False
-                pos, vals = 2, []
-                while len(vals) < 3:
-                    while pos < len(payload) and payload[pos : pos + 1].isspace():
-                        pos += 1
-                    if payload[pos : pos + 1] == b"#":
-                        while pos < len(payload) and payload[pos : pos + 1] != b"\n":
-                            pos += 1
-                        continue
-                    start = pos
-                    while pos < len(payload) and not payload[pos : pos + 1].isspace():
-                        pos += 1
-                    if pos == start:
-                        raise ValueError  # header truncated mid-token
-                    vals.append(int(payload[start:pos]))
-                pos += 1
-                w, h, maxval = vals
-                if maxval > 255:
-                    raise ValueError
-                raster = np.frombuffer(
-                    payload, dtype=np.uint8, count=w * h * 3, offset=pos
-                )
-                return raster.reshape(h, w, 3)
-            if payload[:2] == b"BM":
-                data_off = int.from_bytes(payload[10:14], "little")
-                w = int.from_bytes(payload[18:22], "little", signed=True)
-                h_raw = int.from_bytes(payload[22:26], "little", signed=True)
-                bpp = int.from_bytes(payload[28:30], "little")
-                comp = int.from_bytes(payload[30:34], "little")
-                if bpp != 24 or comp != 0:
-                    raise ValueError
-                h = abs(h_raw)
-                stride = ((w * 3 + 3) // 4) * 4
-                raster = np.frombuffer(
-                    payload, dtype=np.uint8, count=stride * h, offset=data_off
-                ).reshape(h, stride)[:, : w * 3].reshape(h, w, 3)
-                if h_raw > 0:
-                    raster = raster[::-1]
-                return raster[:, :, ::-1]
-            raise ValueError
-
         def rows(doc_id, payload):
             if payload is None:
                 return None
             try:
-                img = _decode(bytes(payload))
-            except Exception:
+                img = decode_image(bytes(payload))
+            except Exception:  # quarantine: any undecodable payload
                 return None
             sums = img.reshape(-1, 3).sum(axis=0, dtype=np.int64)
             return (
@@ -220,11 +175,7 @@ def decode_image_stats(mm: DataFrame) -> DataFrame:
 def extract_features(mm: DataFrame) -> DataFrame:
     """Feature extraction over Arrow batches via mapInPandas — the real
     codec call would replace the fake feature fn. Narrow operation: no
-    shuffle, payload pruned from the output.
-
-    The worker fn is fully self-contained (nested defs, no references
-    to this module) so cloudpickle ships it BY VALUE — Python workers
-    must not need the engine package importable on their sys.path."""
+    shuffle, payload pruned from the output."""
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         def fake_features(payload, n=4):

@@ -19,8 +19,10 @@ Five top-k operators, one exact baseline and four scale paths:
 All vector math is JVM-side (`zip_with` dot product + `aggregate`
 sums); no Python in the hot path. The hyperplanes are pseudo-random but
 fully deterministic: plane p, dimension d gets weight
-(pmod(xxhash64(p*4099+d), 2001) - 1000) / 1000 — reproducible across
-runs with zero driver-side state to broadcast.
+(blake2b("p,d", 4-byte digest) mod 2001 - 1000) / 1000
+(`functions.vectors.plane_weight`), embedded in the plan as literal
+arrays — reproducible across runs with zero driver-side state to
+broadcast.
 """
 
 from __future__ import annotations

@@ -2424,8 +2424,7 @@ def q_grouped_median_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     STATISTIC (median/min/max/count): exact selections with no
     floating-point accumulation, so numpy and DuckDB agree bit-for-bit
     (a mean/stddev variant would diverge in the last ulp from summation
-    order). The closure is self-contained — workers don't have the repo
-    on sys.path (NOTES.md).
+    order).
 
     r12 (guide §4.2): the Arrow groups are ID BUCKETS (pmod n), not
     single users — one Python call + one VECTORIZED pandas groupby per

@@ -25,148 +25,138 @@ honor at scale:
 - `abort` deletes the reported temps (best-effort; orphans are
   invisible to readers anyway because only committed names match the
   `part-*.json` glob).
-
-Classes are built inside a factory so cloudpickle ships them BY VALUE
-— executors never import this package (the repo-wide constraint, see
-NOTES.md).
 """
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import uuid
+from dataclasses import dataclass
+
 from pyspark.sql import SparkSession
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceStreamWriter,
+    DataSourceWriter,
+    WriterCommitMessage,
+)
 
 
-def make_ndjson_sink_source():
-    """Build the DataSource class (pickled by value — see module doc)."""
-    from dataclasses import dataclass
+@dataclass
+class TempFileMessage(WriterCommitMessage):
+    tmp_path: str
+    n_rows: int
 
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamWriter,
-        DataSourceWriter,
-        WriterCommitMessage,
-    )
 
-    @dataclass
-    class TempFileMessage(WriterCommitMessage):
-        tmp_path: str
-        n_rows: int
+def _write_tmp(path: str, iterator) -> TempFileMessage:
+    os.makedirs(path, exist_ok=True)
+    tmp = os.path.join(path, f".tmp-{uuid.uuid4().hex}")
+    n = 0
+    with open(tmp, "w") as f:
+        for row in iterator:
+            f.write(json.dumps(row.asDict(recursive=True), default=str) + "\n")
+            n += 1
+    return TempFileMessage(tmp_path=tmp, n_rows=n)
 
-    def _write_tmp(path: str, iterator) -> TempFileMessage:
-        import json
-        import os
-        import uuid
 
-        os.makedirs(path, exist_ok=True)
-        tmp = os.path.join(path, f".tmp-{uuid.uuid4().hex}")
-        n = 0
-        with open(tmp, "w") as f:
-            for row in iterator:
-                f.write(json.dumps(row.asDict(recursive=True), default=str) + "\n")
-                n += 1
-        return TempFileMessage(tmp_path=tmp, n_rows=n)
+def _commit(path: str, messages, prefix: str, clear_glob: str | None) -> None:
+    """Driver-side rename of winning attempts to final names.
+    clear_glob: files deleted BEFORE the renames — the stream
+    writer passes its own batch's pattern (idempotent replay of a
+    checkpoint-driven batchId); the batch writer passes the whole
+    part-glob only in overwrite mode, never on append (each batch
+    commit uses a fresh unique prefix, so appends coexist)."""
+    if clear_glob:
+        for old in glob.glob(os.path.join(path, clear_glob)):
+            os.remove(old)
+    for idx, m in enumerate(m for m in messages if m is not None):
+        final = os.path.join(path, f"{prefix}-{idx:05d}.json")
+        if m.n_rows:
+            os.replace(m.tmp_path, final)
+        else:  # empty task: no file, but temp still needs removing
+            try:
+                os.remove(m.tmp_path)
+            except OSError:
+                pass
 
-    def _commit(path: str, messages, prefix: str, clear_glob: str | None) -> None:
-        """Driver-side rename of winning attempts to final names.
-        clear_glob: files deleted BEFORE the renames — the stream
-        writer passes its own batch's pattern (idempotent replay of a
-        checkpoint-driven batchId); the batch writer passes the whole
-        part-glob only in overwrite mode, never on append (each batch
-        commit uses a fresh unique prefix, so appends coexist)."""
-        import glob
-        import os
 
-        if clear_glob:
-            for old in glob.glob(os.path.join(path, clear_glob)):
-                os.remove(old)
-        for idx, m in enumerate(m for m in messages if m is not None):
-            final = os.path.join(path, f"{prefix}-{idx:05d}.json")
-            if m.n_rows:
-                os.replace(m.tmp_path, final)
-            else:  # empty task: no file, but temp still needs removing
-                try:
-                    os.remove(m.tmp_path)
-                except OSError:
-                    pass
+def _abort(messages) -> None:
+    for m in messages:
+        if m is not None:
+            try:
+                os.remove(m.tmp_path)
+            except OSError:
+                pass
 
-    def _abort(messages) -> None:
-        import os
 
-        for m in messages:
-            if m is not None:
-                try:
-                    os.remove(m.tmp_path)
-                except OSError:
-                    pass
+class NdjsonStreamWriter(DataSourceStreamWriter):
+    def __init__(self, options):
+        self.path = options["path"]
 
-    class NdjsonStreamWriter(DataSourceStreamWriter):
-        def __init__(self, options):
-            self.path = options["path"]
+    def write(self, iterator):
+        return _write_tmp(self.path, iterator)
 
-        def write(self, iterator):
-            return _write_tmp(self.path, iterator)
+    def commit(self, messages, batchId):
+        # checkpoint-driven batchId: deterministic names + replay
+        # deletion of this batch's previous attempt = exactly-once
+        _commit(
+            self.path,
+            messages,
+            f"part-{batchId:08d}",
+            f"part-{batchId:08d}-*.json",
+        )
 
-        def commit(self, messages, batchId):
-            # checkpoint-driven batchId: deterministic names + replay
-            # deletion of this batch's previous attempt = exactly-once
-            _commit(
-                self.path,
-                messages,
-                f"part-{batchId:08d}",
-                f"part-{batchId:08d}-*.json",
-            )
+    def abort(self, messages, batchId):
+        _abort(messages)
 
-        def abort(self, messages, batchId):
-            _abort(messages)
 
-    class NdjsonBatchWriter(DataSourceWriter):
-        """Batch leg: there is no checkpoint-driven batch id, so every
-        commit mints a UNIQUE id (driver-side uuid) — two successive
-        append saves to the same path coexist instead of the second
-        silently deleting the first's files. overwrite=True clears all
-        previously committed parts atomically inside commit()."""
+class NdjsonBatchWriter(DataSourceWriter):
+    """Batch leg: there is no checkpoint-driven batch id, so every
+    commit mints a UNIQUE id (driver-side uuid) — two successive
+    append saves to the same path coexist instead of the second
+    silently deleting the first's files. overwrite=True clears all
+    previously committed parts atomically inside commit()."""
 
-        def __init__(self, options, overwrite: bool):
-            import uuid
+    def __init__(self, options, overwrite: bool):
+        self.path = options["path"]
+        self.overwrite = overwrite
+        self.commit_id = uuid.uuid4().hex[:16]
 
-            self.path = options["path"]
-            self.overwrite = overwrite
-            self.commit_id = uuid.uuid4().hex[:16]
+    def write(self, iterator):
+        return _write_tmp(self.path, iterator)
 
-        def write(self, iterator):
-            return _write_tmp(self.path, iterator)
+    def commit(self, messages):
+        _commit(
+            self.path,
+            messages,
+            f"part-c{self.commit_id}",
+            "part-*.json" if self.overwrite else None,
+        )
 
-        def commit(self, messages):
-            _commit(
-                self.path,
-                messages,
-                f"part-c{self.commit_id}",
-                "part-*.json" if self.overwrite else None,
-            )
+    def abort(self, messages):
+        _abort(messages)
 
-        def abort(self, messages):
-            _abort(messages)
 
-    class NdjsonSinkDataSource(DataSource):
-        """format("ndjson_sink"), option path=<dir>. Batch append /
-        overwrite + stream append — the two-phase temp-then-rename
-        protocol above."""
+class NdjsonSinkDataSource(DataSource):
+    """format("ndjson_sink"), option path=<dir>. Batch append /
+    overwrite + stream append — the two-phase temp-then-rename
+    protocol above."""
 
-        @classmethod
-        def name(cls):
-            return "ndjson_sink"
+    @classmethod
+    def name(cls):
+        return "ndjson_sink"
 
-        def schema(self):
-            return "key string, value string"
+    def schema(self):
+        return "key string, value string"
 
-        def writer(self, schema, overwrite):
-            return NdjsonBatchWriter(self.options, overwrite)
+    def writer(self, schema, overwrite):
+        return NdjsonBatchWriter(self.options, overwrite)
 
-        def streamWriter(self, schema, overwrite):
-            return NdjsonStreamWriter(self.options)
-
-    return NdjsonSinkDataSource
+    def streamWriter(self, schema, overwrite):
+        return NdjsonStreamWriter(self.options)
 
 
 def register_ndjson_sink(spark: SparkSession) -> None:
-    spark.dataSource.register(make_ndjson_sink_source())
+    spark.dataSource.register(NdjsonSinkDataSource)

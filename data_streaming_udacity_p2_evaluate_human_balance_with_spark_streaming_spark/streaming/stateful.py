@@ -13,13 +13,28 @@ finite stream through this operator converges to the same totals.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+
+def _in_order(
+    batches: Iterator[pd.DataFrame], by: Sequence[str]
+) -> pd.DataFrame | None:
+    """One group's micro-batch chunks as one frame, stably sorted on the
+    columns `by`, so rows tied on every column keep their arrival order;
+    None when the group brought no rows."""
+    chunks = [pdf for pdf in batches if len(pdf)]
+    if not chunks:
+        return None
+    return pd.concat(chunks, ignore_index=True).sort_values(
+        list(by), kind="mergesort"
+    )
+
 
 OUTPUT_SCHEMA = "user_id bigint, n_events bigint, total_score double, avg_score double"
 STATE_SCHEMA = "n bigint, total double"
@@ -57,13 +72,10 @@ def running_risk_stats(
         batches: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        # self-contained: shipped by value, workers don't import this pkg
-        import pandas as _pd
-
         if state.hasTimedOut:
             state.remove()
             if emit_eviction_marker:
-                yield _pd.DataFrame(
+                yield pd.DataFrame(
                     {
                         "user_id": [key[0]],
                         "n_events": [-1],
@@ -79,7 +91,7 @@ def running_risk_stats(
         state.update((n, total))
         if idle_ttl_ms is not None:
             state.setTimeoutDuration(idle_ttl_ms)
-        yield _pd.DataFrame(
+        yield pd.DataFrame(
             {
                 "user_id": [key[0]],
                 "n_events": [n],
@@ -121,8 +133,6 @@ def dedup_guard(
     kname, sname = key_col, seq_col
 
     def guard(key, batches, state):
-        import pandas as _pd
-
         high = state.get[0] if state.exists else -1
         out = []
         for pdf in batches:
@@ -133,9 +143,9 @@ def dedup_guard(
                 out.append(fresh)
         state.update((high,))
         yield (
-            _pd.concat(out)
+            pd.concat(out)
             if out
-            else _pd.DataFrame({kname: [], sname: []}).astype("int64")
+            else pd.DataFrame({kname: [], sname: []}).astype("int64")
         )
 
     return (
@@ -192,12 +202,10 @@ def funnel_stage_tracker(
         batches: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        # self-contained: shipped by value, workers don't import this pkg
-        import pandas as _pd
-
         t1, t2, t3 = state.get if state.exists else (None, None, None)
-        pdf = _pd.concat(list(batches))
-        pdf = pdf.sort_values(ts)
+        pdf = _in_order(batches, (ts,))
+        if pdf is None:
+            return
         advanced = False
         for _, row in pdf.iterrows():
             et = row[typ]
@@ -214,7 +222,7 @@ def funnel_stage_tracker(
         if advanced:
             state.update((t1, t2, t3))
             stage = (t1 is not None) + (t2 is not None) + (t3 is not None)
-            yield _pd.DataFrame(
+            yield pd.DataFrame(
                 {
                     "user_id": [key[0]],
                     "stage": [stage],
@@ -245,7 +253,7 @@ def transition_tracker(
     events: DataFrame,
     user_col: str = "user_id",
     type_col: str = "event_type",
-    ts_col: str = "ts",
+    order_cols: tuple[str, str] = ("ts", "event_id"),
 ) -> DataFrame:
     """Streaming twin of plans.warehouse.q_event_transition_matrix:
     per-user first-order transition counts tracked in state. State is
@@ -255,23 +263,24 @@ def transition_tracker(
     emitted stream equals the batch lead()-window matrix.
 
     Same ordered-replay PRECONDITION as funnel_stage_tracker: rows are
-    event-time sorted within each batch, so any micro-batch split of an
-    ordered stream converges; cross-batch disorder would thread a late
-    event into the wrong position (the batch window would not). The
-    equivalence is certified by
-    tests/test_streaming.py::test_transition_tracker_matches_batch."""
-    user, typ, ts = user_col, type_col, ts_col
+    sorted on `order_cols` (event time, then the event id that breaks
+    its ties, as the batch window orders them) within each batch, so
+    any micro-batch split of an ordered stream converges; cross-batch
+    disorder would thread a late event into the wrong position (the
+    batch window would not). The equivalence is certified by
+    tests/test_stateful_recovery.py::test_transition_tracker_matches_batch."""
+    user, typ = user_col, type_col
+    ts = order_cols[0]
 
     def update(
         key: tuple,
         batches: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        # self-contained: shipped by value, workers don't import this pkg
-        import pandas as _pd
-
         last_type, last_ts = state.get if state.exists else (None, None)
-        pdf = _pd.concat(list(batches)).sort_values(ts)
+        pdf = _in_order(batches, order_cols)
+        if pdf is None:
+            return
         counts: dict = {}
         for _, row in pdf.iterrows():
             et = row[typ]
@@ -282,7 +291,7 @@ def transition_tracker(
             last_type, last_ts = et, t_us
         state.update((last_type, last_ts))
         if counts:
-            yield _pd.DataFrame(
+            yield pd.DataFrame(
                 {
                     "user_id": [key[0]] * len(counts),
                     "from_type": [p[0] for p in counts],
@@ -292,7 +301,7 @@ def transition_tracker(
             )
 
     return (
-        events.select(user, typ, ts)
+        events.select(user, typ, *order_cols)
         .groupBy(user)
         .applyInPandasWithState(
             update,
@@ -373,14 +382,11 @@ def windowed_topk(
         batches: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        # self-contained: shipped by value, workers don't import this pkg
-        import pandas as _pd
-
         if state.hasTimedOut:
             types, counts = state.get
             order = sorted(zip(types, counts), key=lambda p: (-p[1], p[0]))[:k]
             state.remove()
-            yield _pd.DataFrame(
+            yield pd.DataFrame(
                 {
                     "window_start": [key[0]] * len(order),
                     "rank": list(range(1, len(order) + 1)),
@@ -465,31 +471,25 @@ def ewma_tracker(
     mode. State: two scalars per key — keyset-bounded, event-volume
     independent, same class as running_risk_stats."""
     user, val = user_col, value_col
-    o1, o2 = order_cols
 
     def update(
         key: tuple,
         batches: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        # self-contained: shipped by value, workers don't import this pkg
-        import pandas as _pd
-
         n, s = state.get if state.exists else (0, 0.0)
-        chunks = [pdf for pdf in batches]
-        pdf = _pd.concat(chunks, ignore_index=True) if chunks else None
-        if pdf is not None and len(pdf):
-            pdf = pdf.sort_values([o1, o2], kind="mergesort")
+        pdf = _in_order(batches, order_cols)
+        if pdf is not None:
             for v in pdf[val].tolist():
                 s = s / 2.0 + float(v) / 2.0
                 n += 1
         state.update((n, s))
-        yield _pd.DataFrame(
+        yield pd.DataFrame(
             {"user_id": [key[0]], "n_events": [n], "ewma": [s]}
         )
 
     return (
-        events.select(user, o1, o2, val)
+        events.select(user, *order_cols, val)
         .groupBy(user)
         .applyInPandasWithState(
             update,
@@ -530,22 +530,17 @@ def debounce_tracker(
         batches: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        # self-contained: shipped by value, workers don't import this pkg
-        import pandas as _pd
-
         last, n, kept = (
             state.get if state.exists else (-(1 << 62), 0, 0)
         )
-        chunks = [pdf for pdf in batches]
-        pdf = _pd.concat(chunks, ignore_index=True) if chunks else None
-        if pdf is not None and len(pdf):
-            pdf = pdf.sort_values([o1, o2], kind="mergesort")
+        pdf = _in_order(batches, order_cols)
+        if pdf is not None:
             for t in pdf[o1].tolist():
                 n += 1
                 if int(t) - last >= thr:
                     last, kept = int(t), kept + 1
         state.update((last, n, kept))
-        yield _pd.DataFrame(
+        yield pd.DataFrame(
             {"user_id": [key[0]], "n_events": [n], "n_kept": [kept]}
         )
 

@@ -1,9 +1,10 @@
 """Emulate the spark-graft driver: plain SparkSession (driver's own
 config, NOT the engine's get_spark), import __spark_entry__, run
 entry() + queries()/oracle_sql() cross-check at sf0.01 via DuckDB."""
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 from pyspark.sql import SparkSession
 

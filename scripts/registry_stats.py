@@ -1,9 +1,10 @@
 """Print the LIVE query-registry counts — the single source of truth
 for 'N queries, M oracled' claims in README/NOTES (hand-maintained
 prose drifted twice; generate, don't transcribe)."""
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.plans import queries as Q
 
 n = len(Q.REGISTRY)

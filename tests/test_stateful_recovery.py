@@ -851,6 +851,7 @@ def test_transition_tracker_matches_batch(spark, tmp_path):
                     "user_id": u,
                     "event_type": types[(u * 5 + k * (u % 3 + 1)) % len(types)],
                     "ts": f"2024-01-01T00:{k:02d}:{(u * 11) % 60:02d}.000Z",
+                    "event_id": u * 12 + k,
                 }
             )
     rows.sort(key=lambda r: r["ts"])
@@ -863,7 +864,9 @@ def test_transition_tracker_matches_batch(spark, tmp_path):
                 f.write(json.dumps(r) + "\n")
         _os.utime(f"{d}/f{i}.json", (1700000000 + i, 1700000000 + i))
 
-    schema = _parse_datatype_string("user_id bigint, event_type string, ts timestamp")
+    schema = _parse_datatype_string(
+        "user_id bigint, event_type string, ts timestamp, event_id bigint"
+    )
     stream = (
         spark.readStream.format("json")
         .schema(schema)
@@ -925,19 +928,26 @@ def test_transition_tracker_recovers_state_across_restart(spark, tmp_path):
         transition_tracker,
     )
 
-    rows1 = [
-        {"user_id": 1, "event_type": "view", "ts": "2024-01-01T00:00:00.000Z"},
-        {"user_id": 1, "event_type": "click", "ts": "2024-01-01T00:01:00.000Z"},
-    ]
+    def ev(event_id, event_type, minute):
+        return {
+            "user_id": 1,
+            "event_type": event_type,
+            "ts": f"2024-01-01T00:{minute:02d}:00.000Z",
+            "event_id": event_id,
+        }
+
+    rows1 = [ev(0, "view", 0), ev(1, "click", 1)]
     rows2 = [
         # first event after restart: transition (click -> purchase)
         # exists ONLY if state survived the restart
-        {"user_id": 1, "event_type": "purchase", "ts": "2024-01-01T00:02:00.000Z"},
+        ev(2, "purchase", 2),
     ]
     d = str(tmp_path / "trans_restart")
     _os.makedirs(d)
     ckpt = str(tmp_path / "ckpt")
-    schema = _parse_datatype_string("user_id bigint, event_type string, ts timestamp")
+    schema = _parse_datatype_string(
+        "user_id bigint, event_type string, ts timestamp, event_id bigint"
+    )
 
     out_dir = str(tmp_path / "trans_out")
 
@@ -980,6 +990,52 @@ def test_transition_tracker_recovers_state_across_restart(spark, tmp_path):
         .collect()
     }
     assert total == {("view", "click"): 1, ("click", "purchase"): 1}
+
+
+def test_transition_tracker_breaks_ts_ties_like_batch(spark, tmp_path):
+    """Events tied on event time thread in event_id order, as the batch
+    twin's (ts, event_id) window orders them, whatever order they
+    arrive in: one user's (0 signup t0), (2 click t1), (1 view t1)
+    arriving in that order give signup->view and view->click, in the
+    stream as in plans.warehouse.q_event_transition_matrix."""
+    from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.plans.warehouse import (
+        q_event_transition_matrix,
+    )
+    from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.streaming.stateful import (
+        transition_tracker,
+    )
+
+    events = spark.createDataFrame(
+        [
+            (7, "signup", "2024-01-01 00:00:00", 0),
+            (7, "click", "2024-01-01 00:01:00", 2),
+            (7, "view", "2024-01-01 00:01:00", 1),
+        ],
+        "user_id bigint, event_type string, ts_s string, event_id bigint",
+    ).select("user_id", "event_type", F.to_timestamp("ts_s").alias("ts"), "event_id")
+    path = str(tmp_path / "events.parquet")
+    events.coalesce(1).write.parquet(path)  # one file, in arrival order
+
+    q = (
+        transition_tracker(spark.readStream.schema(events.schema).parquet(path))
+        .writeStream.outputMode("update")
+        .format("memory")
+        .queryName("trans_ts_ties")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    streamed = {
+        (r.from_type, r.to_type): r.n
+        for r in spark.sql("SELECT * FROM trans_ts_ties").collect()
+    }
+    batch = {
+        (r.from_type, r.to_type): r.n_transitions
+        for r in q_event_transition_matrix(spark, str(tmp_path)).collect()
+    }
+    assert batch == {("signup", "view"): 1, ("view", "click"): 1}
+    assert streamed == batch
 
 
 def test_windowed_topk_recovers_counts_across_restart(spark, tmp_path):

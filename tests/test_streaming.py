@@ -964,6 +964,7 @@ def test_transition_tracker_state_bounded_by_keyset(spark, tmp_path):
                             "user_id": u,
                             "event_type": types[(b + i) % 3],
                             "ts": f"2024-01-01T00:{b:02d}:{i % 60:02d}.{seq % 1000:03d}Z",
+                            "event_id": seq,
                         }
                     )
                     + "\n"
@@ -972,7 +973,9 @@ def test_transition_tracker_state_bounded_by_keyset(spark, tmp_path):
         _os.utime(f"{src}/f{b}.json", (1700000000 + b, 1700000000 + b))
         _t.sleep(0.01)
 
-    schema = _parse_datatype_string("user_id long, event_type string, ts timestamp")
+    schema = _parse_datatype_string(
+        "user_id long, event_type string, ts timestamp, event_id long"
+    )
     stream = (
         spark.readStream.format("json")
         .schema(schema)
