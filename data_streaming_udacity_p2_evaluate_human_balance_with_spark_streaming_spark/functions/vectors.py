@@ -135,7 +135,10 @@ def plane_dots(
 
 
 def infer_dim(df, vec_col: str) -> int | None:
-    """Probe the vector dimension from the first row (cheap one-row
-    job at plan-build time); None on empty input."""
+    """Probe the vector dimension from the first row; None on empty
+    input. This runs Spark jobs at plan-build time, and `first()` runs
+    the input's whole upstream (every shuffle stage feeding it), so it
+    is as costly as the input's lineage, not one row. Only operators
+    that must size a weight literal past 256 dims call it."""
     row = df.select(F.size(F.col(vec_col)).alias("d")).first()
     return None if row is None else row.d

@@ -25,31 +25,6 @@ from ..functions.hashing import char_shingles, minhash_perm, word_shingles
 from .graphs import _free, _sym_edges
 
 
-def spread(df: DataFrame, col: str) -> DataFrame:
-    """Raise a CPU-heavy narrow input to the session's default
-    parallelism when the source delivers fewer partitions (single-file
-    fixtures; AQE byte-coalesced tiny-byte stages). Shingling/hashing
-    cost is per ROW, not per byte, so leaving it on one task serializes
-    the pipeline; the repartition shuffles only the raw documents.
-    No-op when the input is already at least that parallel — at real
-    scale inputs arrive in thousands of partitions and this adds
-    nothing.
-
-    Streaming inputs pass through untouched: `.rdd` is illegal on a
-    streaming DataFrame, and micro-batch parallelism is the source's
-    concern. The `.rdd.getNumPartitions()` probe translates the input's
-    physical plan at build time. On a table scan that is trivial; on an
-    aggregate or join input (the curation benchmark hands the MinHash
-    stage `exact_dedup` output) AQE runs the input's shuffle stages then,
-    as Spark jobs of their own, before the plan that uses them is built."""
-    if df.isStreaming:
-        return df
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target, col)
-    return df
-
-
 def exact_dedup(docs: DataFrame, key: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact dedup: keep the smallest id per identical payload. One
     hash-aggregate shuffle on the (hashed) payload."""
@@ -133,9 +108,8 @@ def lsh_band_table(
     (b) xxhash64 runs per exploded ROW (whole-stage codegen) instead of
     inside an interpreted transform lambda per array element."""
     rows = num_hashes // bands
-    base = spread(docs, id_col)
     if shingle_mode == "word":
-        toked = base.select(
+        toked = docs.select(
             F.col(id_col).alias("_id"),
             F.col(text_col).alias("_txt"),
             F.split(F.col(text_col), " ").alias("_t"),
@@ -146,7 +120,7 @@ def lsh_band_table(
             f"i -> array_join(slice(_t, i, {shingle_k}), ' ')) END"
         )
     else:
-        toked = base.select(
+        toked = docs.select(
             F.col(id_col).alias("_id"), F.col(text_col).alias("_txt")
         )
         sh = char_shingles("_txt", shingle_k)
@@ -261,8 +235,7 @@ def ngram_jaccard(
         .distinct()
     )
     sets_df = (
-        spread(docs, id_col)
-        .join(cand_ids, id_col, "left_semi")
+        docs.join(cand_ids, id_col, "left_semi")
         .select(
             F.col(id_col).alias("_id"),
             F.array_distinct(shingle_fn(text_col, shingle_k)).alias("sset"),
@@ -348,7 +321,7 @@ def simhash_agg(
     For corpora with longer documents pass packed=False (the plain
     64-sum form has no bound) or pre-chunk — the planted-signature
     parity test certifies both forms equal."""
-    toks = spread(docs, id_col).select(
+    toks = docs.select(
         F.col(id_col).alias("_id"),
         F.explode(F.split(text_col, " ")).alias("tok"),
     ).select("_id", F.xxhash64("tok").alias("h"))
@@ -639,7 +612,7 @@ def ngram_overlap_join(
     in the reference (SURVEY.md §2.5); north-star extension."""
 
     def exploded(df: DataFrame, out_id: str) -> DataFrame:
-        return spread(df, id_col).select(
+        return df.select(
             F.col(id_col).alias(out_id),
             F.explode(
                 F.array_distinct(word_shingles(text_col, shingle_k))
@@ -706,7 +679,7 @@ def embedding_near_dups(
     # (id, tab, bucket) triples only — the helper pins them, so the
     # bucket dots are computed once and the self-join doesn't evaluate
     # 2×tables×planes dot products per row.
-    bucketed = spread(emb, "_id").select("_id", F.explode(tables).alias("tb")).select(
+    bucketed = emb.select("_id", F.explode(tables).alias("tb")).select(
         "_id", "tb.tab", "tb.bucket"
     )
     pairs = (
@@ -756,12 +729,9 @@ def sparse_cosine_pairs(
 
     Returns (doc_a, doc_b, cosine ≥ threshold) with doc_a < doc_b.
     """
-    sets_df = (
-        spread(docs, id_col)
-        .select(
-            F.col(id_col).alias("_id"),
-            F.array_distinct(word_shingles(text_col, shingle_k)).alias("sset"),
-        )
+    sets_df = docs.select(
+        F.col(id_col).alias("_id"),
+        F.array_distinct(word_shingles(text_col, shingle_k)).alias("sset"),
     )
     # ex feeds the df aggregate AND the postings join: pin it so the
     # corpus is shingled ONCE (the ngram_jaccard lesson — un-pinned
@@ -857,8 +827,7 @@ def prefix_filter_near_dups(
         return F.ceil(x * F.lit(1.0 - 1e-12))
 
     sets_df = (
-        spread(docs, id_col)
-        .select(
+        docs.select(
             F.col(id_col).alias("_id"),
             F.array_distinct(word_shingles(text_col, shingle_k)).alias("sset"),
         )
@@ -1112,27 +1081,29 @@ def semantic_index(
     Int64-safety guard (ADVICE r10): the divisionless threshold
     compares 1e6·qdot² against t²·n2a·n2b with qdot ≤ 127²·dim, so
     1e6·(127²·dim)² must stay < 2⁶³ — true only for dim ≤ 188.
-    Beyond that the product silently wraps BIGINT under ANSI-off;
-    raise instead (mirrors the pagerank_integer overflow guard). An
-    empty corpus has no dim to check and gives an empty index."""
-    from ..functions.vectors import (
-        hyperplane_bucket,
-        infer_dim,
-        quantize_scale,
-        quantize_vec,
-    )
+    Beyond that the product silently wraps BIGINT under ANSI-off, so
+    every row is checked inside the plan and a longer vector fails the
+    query with a `raise_error` (mirrors the pagerank_integer overflow
+    guard). Building the index runs no job: the cell planes are the
+    256-weight literal sliced to each row's length (`n_dims=None`,
+    the same `plane_weight` values as an exact-dim literal)."""
+    from ..functions.vectors import hyperplane_bucket, quantize_scale, quantize_vec
 
-    dim = infer_dim(corpus, vec_col)
-    if dim is not None and 1_000_000 * (127 * 127 * dim) ** 2 >= 2**63:
-        raise ValueError(
-            f"semantic_index: embedding dim {dim} > 188 overflows the "
-            "int64 divisionless cosine comparison (1e6*qdot^2); "
-            "reduce dim or rescale the quantization"
+    v = F.col(vec_col).cast("array<double>")
+    overflow = F.raise_error(
+        F.concat(
+            F.lit("semantic_index: embedding dim "),
+            F.size(v).cast("string"),
+            F.lit(
+                " > 188 overflows the int64 divisionless cosine comparison "
+                "(1e6*qdot^2); reduce dim or rescale the quantization"
+            ),
         )
+    )
     cells = corpus.select(
         F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("_v"),
-    ).withColumn("cell", hyperplane_bucket("_v", n_planes, n_dims=dim))
+        F.when(F.size(v) > 188, overflow).otherwise(v).alias("_v"),
+    ).withColumn("cell", hyperplane_bucket("_v", n_planes))
     return (
         cells.withColumn("_s", quantize_scale("_v"))
         .withColumn("q", quantize_vec("_v", "_s"))
@@ -1215,7 +1186,7 @@ def incremental_semantic_dedup(
     # r12: per-cell batch×corpus int64 GEMM in a cogrouped Arrow batch
     # replaces the interpreted per-candidate zip_with/aggregate chain —
     # identical exact arithmetic (_int8_cosine_hits, shared with
-    # _cell_pair_edges_gemm), emitting the surviving (bid, cid) pairs;
+    # semantic_dedup), emitting the surviving (bid, cid) pairs;
     # the min/count consolidation stays a JVM hash aggregate.
     def cross(ldf, rdf):
         import pandas as pd
@@ -1250,38 +1221,25 @@ def incremental_semantic_dedup(
     )
 
 
-def _cell_pair_edges_gemm(
-    codes: DataFrame, threshold_milli: int
-) -> DataFrame:
-    """Within-cell near-dup edges over a `semantic_index` code table,
-    scored by per-cell int64 matrix multiplication in an Arrow batch
-    (r12, guide §4.2): the JVM zip_with/aggregate form evaluates an
-    interpreted 64-element lambda chain PER CANDIDATE PAIR (Σ cell²
-    pairs — measured the dominant cost of dedup_semantic_embedding at
-    sf0.1), while one numpy GEMM per cell scores the whole block
-    through BLAS. Arithmetic is EXACT and identical: q codes and n2
-    norms are computed JVM-side by semantic_index (unchanged), the
-    Arrow transfer carries int64, and the divisionless comparison
-    1e6·qdot² ≥ t²·n2a·n2b runs in int64 — in-range by the
-    semantic_index dim ≤ 188 guard, the same bound the JVM path needs
-    (_int8_cosine_hits, in 1024-row blocks).
+def _min_label_closure(n, a, b):
+    """Connected-component labels of an n-node graph whose edges are
+    the index pairs (a[k], b[k]): every node ends labelled with the
+    smallest node index of its component. Min-label propagation across
+    the edges plus one pointer jump (lab = lab[lab]) per round, until a
+    round changes no label. Labels only ever fall and always name a
+    node of the same component, so the fixpoint is the component
+    minimum."""
+    import numpy as np
 
-    Returns (doc_a, doc_b) with doc_a < doc_b — the exact edge set of
-    the zip_with form (oracle-certified via dedup_semantic_embedding)."""
-    t2 = threshold_milli * threshold_milli
-
-    def gen(pdf):
-        import pandas as pd
-
-        if len(pdf) < 2:
-            return pd.DataFrame({"doc_a": [], "doc_b": []}, dtype="int64")
-        ids, q, n2 = _int8_codes(pdf)
-        ai, bi = _int8_cosine_hits(q, n2, q, n2, t2, ids=ids)
-        return pd.DataFrame({"doc_a": ids[ai], "doc_b": ids[bi]})
-
-    return codes.select("vid", "cell", "q", "n2").groupBy("cell").applyInPandas(
-        gen, "doc_a bigint, doc_b bigint"
-    )
+    lab = np.arange(n)
+    while True:
+        nxt = lab.copy()
+        np.minimum.at(nxt, a, lab[b])
+        np.minimum.at(nxt, b, lab[a])
+        nxt = nxt[nxt]
+        if np.array_equal(nxt, lab):
+            return lab
+        lab = nxt
 
 
 def semantic_dedup(
@@ -1304,37 +1262,43 @@ def semantic_dedup(
     division — qcos ≥ t/1000 iff qdot > 0 and
     1e6·qdot² ≥ t²·n2a·n2b on exact BIGINTs (per-vector quantization
     scale cancels out of cosine). All magnitudes are bounded by the
-    DIMENSION (64), not the corpus: qdot ≤ 127²·64 ≈ 1.03e6, so
-    1e6·qdot² ≤ 1.07e18 < 2⁶³ — int64-safe at any corpus size.
+    DIMENSION, not the corpus: qdot ≤ 127²·dim, int64-safe for
+    dim ≤ 188 at any corpus size (the semantic_index guard).
 
-    Scale shape: cells shard the pairwise work — the self-join is an
-    equi-join on `cell`, so candidates are Σ cell_size² instead of N².
-    At 100 TB the cell function graduates from 2^n_planes sign planes
-    to the trained k-means|| IVF index (operators/similarity.ivf_topk)
-    with cells sized to a cap, which keeps per-cell work bounded; the
-    join/CC shape is unchanged. CC runs on the near-dup graph only
-    (≈ dup pairs, a small fraction of N)."""
-    # persist the code table: it feeds the pair scorer AND the final
-    # membership join, and recomputing it re-runs the quantization scan
-    codes = semantic_index(corpus, id_col, vec_col, n_planes).localCheckpoint(
-        eager=False
-    )
-    cells = codes.select("vid", "cell")
-    # r12: per-cell int64 GEMM in an Arrow batch replaces the
-    # interpreted per-pair zip_with/aggregate chain — same exact edge
-    # set (see _cell_pair_edges_gemm), measured ~3× on the pair stage
-    edges = _cell_pair_edges_gemm(codes, threshold_milli)
-    assign = connected_components(edges)
-    return (
-        cells.join(
-            assign.withColumnRenamed("node", "vid"), "vid", "left"
+    Scale shape: cells shard the pairwise work, so candidates are
+    Σ cell_size² instead of N². Edges only ever join two vectors of
+    one cell (SemDeDup compares within an embedding cluster only), so
+    no component leaves its cell and each cell is closed where it is
+    scored: one grouped Arrow batch per cell sorts the cell by vid,
+    scores it with one int64 numpy GEMM per 1024-row block
+    (_int8_cosine_hits; the JVM zip_with/aggregate form evaluated an
+    interpreted lambda chain per candidate pair, measured ~3× slower)
+    and closes its hit pairs with _min_label_closure. Building the
+    plan runs no Spark job. At 100 TB the cell function graduates from
+    2^n_planes sign planes to the trained k-means|| IVF index
+    (operators/similarity.ivf_topk) with cells sized to a cap, which
+    keeps per-cell work bounded; the per-cell shape is unchanged."""
+    t2 = threshold_milli * threshold_milli
+
+    def close(pdf):
+        import pandas as pd
+
+        pdf = pdf.sort_values("vid")
+        ids, q, n2 = _int8_codes(pdf)
+        a, b = _int8_cosine_hits(q, n2, q, n2, t2, ids=ids)
+        lab = _min_label_closure(len(ids), a, b)
+        return pd.DataFrame(
+            {"vid": ids, "cell": pdf["cell"].to_numpy(), "cluster": ids[lab]}
         )
+
+    return (
+        semantic_index(corpus, id_col, vec_col, n_planes)
+        .groupBy("cell")
+        .applyInPandas(close, "vid bigint, cell bigint, cluster bigint")
         .select(
             F.col("vid").alias(id_col),
             "cell",
-            F.coalesce("cluster", F.col("vid")).alias("cluster"),
-            (F.coalesce("cluster", F.col("vid")) == F.col("vid")).alias(
-                "kept"
-            ),
+            "cluster",
+            (F.col("cluster") == F.col("vid")).alias("kept"),
         )
     )

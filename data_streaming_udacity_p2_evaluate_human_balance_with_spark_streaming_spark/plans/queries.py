@@ -1312,10 +1312,10 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     set (the oracle-checkable slice of the LSH pipeline's verify step —
     the LSH candidate generator itself is validated in
     dedup_minhash_lsh, rows-only)."""
-    from ..operators.dedup import shingles, spread
+    from ..operators.dedup import shingles
 
     docs = load_table(spark, sf_dir, "documents")
-    sets_df = spread(docs, "doc_id").select(
+    sets_df = docs.select(
         "doc_id", F.array_distinct(shingles("text", 3)).alias("sset")
     ).persist()
     # The id-band predicate (a < b ≤ a+W) is a RANGE theta — as written

@@ -7,9 +7,11 @@ The log's last line must contain the bench JSON. The optional second
 argument overrides the pin path (tests point it at a temp copy).
 """
 import json
+import os
 import sys
 
-PIN = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/BENCH_QUIET_BASELINE.json"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PIN = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, "BENCH_QUIET_BASELINE.json")
 
 raw = open(sys.argv[1]).read()
 # raw_decode exactly ONE complete JSON object per candidate start

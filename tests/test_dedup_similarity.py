@@ -337,9 +337,10 @@ def test_decode_image_stats_planted(spark):
 def test_decode_image_stats_truncated_header_quarantined(spark):
     """r8 ADVICE fix: a truncated PPM header (b'P6 3'), a '#' comment
     with no trailing newline, and a bare magic must all be QUARANTINED
-    (dropped rows) — before the bounds guards the inlined scan loops
-    spun forever past end-of-payload (b''[0:1].isspace() is False),
-    hanging the executor task instead of dropping the payload."""
+    (dropped rows) — before the bounds guards the header scan loops of
+    `decode_image`, which `decode_image_stats` calls per row, spun
+    forever past end-of-payload (b''[0:1].isspace() is False), hanging
+    the executor task instead of dropping the payload."""
     import numpy as np
     import pytest
 
@@ -1741,8 +1742,13 @@ def test_semantic_dedup_dim_overflow_guard(spark):
     """ADVICE r10: the divisionless cosine compares 1e6*qdot^2 with
     qdot <= 127^2*dim, int64-safe only for dim <= 188 (exact:
     1e6*(127^2*189)^2 >= 2^63 > 1e6*(127^2*188)^2) — larger dims
-    must raise instead of silently wrapping BIGINT (ANSI off)."""
+    must raise instead of silently wrapping BIGINT (ANSI off). The
+    guard checks every row inside the plan, so it fails the query when
+    the result is computed, as a Spark runtime error; a corpus whose
+    first row is short does not slip its 189-d rows past it (they used
+    to get null plane dots, all land in cell 0 and enter the GEMM)."""
     import pytest as _pytest
+    from pyspark.errors import SparkRuntimeException
 
     from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.operators.dedup import (
         semantic_dedup,
@@ -1752,8 +1758,14 @@ def test_semantic_dedup_dim_overflow_guard(spark):
         [(1, [1.0] * 189), (2, [1.0] * 189)],
         "vec_id long, v array<double>",
     )
-    with _pytest.raises(ValueError, match="overflow"):
-        semantic_dedup(wide)
+    with _pytest.raises(SparkRuntimeException, match="overflow"):
+        semantic_dedup(wide).collect()
+    mixed = spark.createDataFrame(
+        [(1, [1.0, 0.5])] + [(i, [1.0] * 189) for i in range(2, 5)],
+        "vec_id long, v array<double>",
+    )
+    with _pytest.raises(SparkRuntimeException, match="overflow"):
+        semantic_dedup(mixed).collect()
     # dim 188 is the documented boundary and must still run
     ok = spark.createDataFrame(
         [(1, [1.0] * 188), (2, [1.0] * 188), (3, [-1.0] * 188)],
@@ -1763,6 +1775,123 @@ def test_semantic_dedup_dim_overflow_guard(spark):
     assert out[2].cluster == 1 and not out[2].kept  # exact twin merged
     assert out[3].kept  # opposite vector stays its own cluster
     spark.catalog.clearCache()
+
+
+def test_semantic_dedup_closes_chains_within_cells(spark):
+    """Components close inside each cell: 2-d unit vectors 20 degrees
+    apart are near-dups (cos 0.94 >= 0.9), 40 degrees apart are not
+    (cos 0.77), so a 65/85/105-degree chain is A~B, B~C, A!~C, and the
+    whole chain is one cluster labelled with its minimum id, which sits
+    at one end. The same chain turned 180 degrees lies in another
+    cell and stays a cluster of its own."""
+    import math
+
+    from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.operators.dedup import (
+        semantic_dedup,
+    )
+
+    def unit(deg):
+        return [math.cos(math.radians(deg)), math.sin(math.radians(deg))]
+
+    rows = [(30, unit(65)), (20, unit(85)), (10, unit(105))]
+    rows += [(11, unit(245)), (31, unit(265)), (21, unit(285))]
+    rows += [(5, unit(175))]  # a vector with no near-dup
+    corpus = spark.createDataFrame(rows, "vec_id long, v array<double>")
+    out = {r.vec_id: r for r in semantic_dedup(corpus).collect()}
+    assert out[30].cell == out[20].cell == out[10].cell
+    assert out[11].cell == out[31].cell == out[21].cell != out[10].cell
+    assert {v: r.cluster for v, r in out.items()} == {
+        30: 10, 20: 10, 10: 10, 11: 11, 31: 11, 21: 11, 5: 5,
+    }
+    assert {v for v, r in out.items() if r.kept} == {10, 11, 5}
+
+
+def test_min_label_closure_matches_union_find():
+    """The per-cell closure labels every node with the smallest index
+    of its component: checked against a union-find on random sparse
+    graphs and on a long path whose minimum sits at the far end."""
+    import random
+
+    import numpy as np
+
+    from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.operators.dedup import (
+        _min_label_closure,
+    )
+
+    def union_find(n, pairs):
+        parent = list(range(n))
+
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for a, b in pairs:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+        return [find(x) for x in range(n)]
+
+    rng = random.Random(7)
+    graphs = [(1, []), (200, [(i, i + 1) for i in range(199)][::-1])]
+    for _ in range(30):
+        n = rng.randint(2, 60)
+        graphs.append(
+            (n, [tuple(sorted(rng.sample(range(n), 2))) for _ in range(rng.randint(0, n))])
+        )
+    for n, pairs in graphs:
+        a = np.array([p[0] for p in pairs], dtype=np.int64)
+        b = np.array([p[1] for p in pairs], dtype=np.int64)
+        assert _min_label_closure(n, a, b).tolist() == union_find(n, pairs)
+
+
+def test_semantic_family_builds_without_jobs(spark):
+    """Building semantic_index or semantic_dedup over a shuffled
+    upstream starts no Spark job: no dim probe and no distributed
+    components loop run at plan-build time (the DAGScheduler job
+    counter does not move). The plans still run."""
+    from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.operators.dedup import (
+        semantic_dedup,
+        semantic_index,
+    )
+
+    raw = spark.createDataFrame(
+        [(i, [float(i % 5), 1.0, float(i % 3)]) for i in range(40)],
+        "vec_id long, v array<double>",
+    )
+    upstream = raw.groupBy("vec_id").agg(F.first("v").alias("v"))
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    index = semantic_index(upstream)
+    out = semantic_dedup(upstream)
+    assert dag.nextJobId() == before
+    assert index.count() == 40
+    assert len(out.collect()) == 40
+    assert dag.nextJobId() > before  # the counter is live
+
+
+def test_hyperplane_bucket_unsized_matches_sized(spark):
+    """`n_dims=None` (the 256-weight literal sliced to each row's
+    length) buckets exactly like the exact-dim literal, for every dim
+    the semantic family accepts."""
+    import random
+
+    from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.functions.vectors import (
+        hyperplane_bucket,
+    )
+
+    rng = random.Random(3)
+    for d in (2, 64, 188):
+        df = spark.createDataFrame(
+            [(i, [rng.uniform(-1, 1) for _ in range(d)]) for i in range(40)],
+            "i long, v array<double>",
+        )
+        got = df.select(
+            hyperplane_bucket("v", 4, n_dims=None).alias("u"),
+            hyperplane_bucket("v", 4, n_dims=d).alias("s"),
+        ).collect()
+        assert all(r.u == r.s for r in got), d
+        assert len({r.s for r in got}) > 1, d  # not all in one cell
 
 
 def test_semantic_family_empty_corpus(spark):

@@ -4,7 +4,11 @@ path, so it outlives an in-place rewrite of the input directory and a
 later call in the same session silently reads stale rows (and it stays
 until an explicit unpersist). The one allowed pin is ivf_topk's
 fingerprinted IVF index cache, which checks the corpus fingerprint on
-every hit and unpersists on mismatch."""
+every hit and unpersists on mismatch.
+
+Operators also never probe `getNumPartitions()` while building a plan:
+on an aggregate or join input it makes AQE run the input's shuffle
+stages as jobs of their own, which the real query then runs again."""
 
 import ast
 import glob
@@ -16,9 +20,9 @@ PKG = "data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spa
 ALLOWED = {("similarity.py", "ivf_topk", "persist")}
 
 
-def _cache_calls(path):
+def _method_calls(path, methods):
     """(file, enclosing top-level function, method) for every
-    `.persist(...)` / `.cache(...)` call in the module."""
+    `.<method>(...)` call in the module whose method is in `methods`."""
     with open(path, encoding="utf-8") as fh:
         tree = ast.parse(fh.read())
     found = []
@@ -27,18 +31,32 @@ def _cache_calls(path):
             if (
                 isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Attribute)
-                and node.func.attr in ("persist", "cache")
+                and node.func.attr in methods
             ):
                 owner = getattr(top, "name", "<module>")
                 found.append((os.path.basename(path), owner, node.func.attr))
     return found
 
 
-def test_operators_pin_with_local_checkpoint_only():
+def _operator_calls(methods):
     calls = []
     for path in sorted(glob.glob(os.path.join(REPO, PKG, "operators", "*.py"))):
-        calls += _cache_calls(path)
+        calls += _method_calls(path, methods)
+    return calls
+
+
+def test_operators_pin_with_local_checkpoint_only():
+    calls = _operator_calls(("persist", "cache"))
     unexpected = [c for c in calls if c not in ALLOWED]
     assert not unexpected, unexpected
     # the scan is live: the one allowed pin is still found
     assert ("similarity.py", "ivf_topk", "persist") in calls
+
+
+def test_operators_never_probe_partition_count():
+    """No `getNumPartitions()` under operators/: the probe runs the
+    input's shuffle stages at plan-build time and throws them away."""
+    assert _operator_calls(("getNumPartitions",)) == []
+    # the scan is live: it finds the probe where a caller still makes one
+    probe = os.path.join(REPO, "tests", "test_python_datasource.py")
+    assert _method_calls(probe, ("getNumPartitions",))

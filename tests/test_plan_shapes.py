@@ -1694,11 +1694,11 @@ def test_dunn_pairs_broadcast_and_takeordered_free(spark):
 
 
 def test_semantic_dedup_pairs_join_on_cell(spark):
-    """dedup_semantic_embedding's pairwise stage must be an EQUI-join
-    on `cell` (candidates = Σ cell², never N²) — no cartesian, no
-    range join. The CC stage is checkpoint-truncated so the inspected
-    plan is the final assembly; the cell equi-join shows as a hash
-    join on cell (sort-merge acceptable, both are keyed)."""
+    """dedup_semantic_embedding's pairwise stage must stay keyed on
+    `cell` (candidates = Σ cell², never N²) — no cartesian, no
+    range join. Scoring and the component closure both run in the one
+    per-cell grouped stage, so the whole operator is a single lazy
+    plan."""
     from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.operators.dedup import (
         semantic_dedup,
     )
@@ -1711,8 +1711,6 @@ def test_semantic_dedup_pairs_join_on_cell(spark):
     base = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    # inspect the EDGE plan before CC (CC checkpoints eagerly): rebuild
-    # the operator's candidate stage exactly as semantic_dedup does
     out = semantic_dedup(base, n_planes=4)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
