@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..sources.files import load_table
+from ..sources.files import load_table, load_table_spread
 from .queries import register
 
 # The exact-money recipe shared by every revenue aggregate below.
@@ -1192,7 +1192,7 @@ def q_dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import connected_components, minhash_near_dups
     from ..operators.models import frozen_logit_expr, quality_feature_frame
 
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
     pairs = minhash_near_dups(docs, threshold=0.5)
     labels = connected_components(pairs)
     scored = quality_feature_frame(docs).select(

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import decode
-from ..sources.files import load_table, table_bytes
+from ..sources.files import load_table, load_table_spread, table_bytes
 from . import pipelines
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -1314,7 +1314,7 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_minhash_lsh, rows-only)."""
     from ..operators.dedup import shingles
 
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
     sets_df = docs.select(
         "doc_id", F.array_distinct(shingles("text", 3)).alias("sset")
     ).persist()
@@ -1395,7 +1395,8 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     xxhash64-derived result is a fixed, partition-independent fact."""
     from ..operators.dedup import minhash_near_dups
 
-    return minhash_near_dups(load_table(spark, sf_dir, "documents"), threshold=0.5)
+    docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
+    return minhash_near_dups(docs, threshold=0.5)
 
 
 @register(
@@ -1427,7 +1428,7 @@ def q_dedup_minhash_char(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import minhash_near_dups
 
     return minhash_near_dups(
-        load_table(spark, sf_dir, "documents"),
+        load_table_spread(spark, sf_dir, "documents", "doc_id"),
         threshold=0.5,
         shingle_k=5,
         shingle_mode="char",
@@ -1794,7 +1795,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     this universe."""
     from ..operators.dedup import ngram_overlap_join
 
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
     return ngram_overlap_join(
         docs.filter(F.col("doc_id") % 50 != 0),
         docs.filter(F.col("doc_id") % 50 == 0),
@@ -1982,18 +1983,11 @@ def q_curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ranking import global_running_sum
     from ..operators.text import stopword_ratio, token_count
 
-    docs = load_table(spark, sf_dir, "documents")
-    # documents lands as ONE file → one input partition, and AQE's
-    # byte-based coalescing keeps these tiny-byte/heavy-CPU rows on one
-    # task; an explicit hash repartition spreads the per-document work
-    # (stopwords, shingles, signatures) across the cluster for ~1 MB of
-    # shuffle. At real scale the input arrives already partitioned and
-    # this is a cheap no-op-shaped exchange.
-    train = (
-        docs.filter(F.col("doc_id") % 50 != 0)
-        .select("doc_id", "lang", "text")
-        .repartition("doc_id")
-    )
+    # spread: the per-document work (stopwords, shingles, signatures)
+    # runs over default-parallelism partitions, not the one-file scan's
+    # single task (load_table_spread)
+    docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
+    train = docs.filter(F.col("doc_id") % 50 != 0).select("doc_id", "lang", "text")
     profiled = train.select(
         "doc_id",
         "lang",
@@ -2565,7 +2559,7 @@ def q_dedup_cluster_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_dedup_similarity.py)."""
     from ..operators.dedup import connected_components, minhash_near_dups
 
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
     pairs = minhash_near_dups(docs, threshold=0.5)
     return connected_components(pairs)
 

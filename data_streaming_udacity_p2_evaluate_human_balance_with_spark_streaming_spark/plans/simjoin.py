@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.dedup import prefix_filter_near_dups, sparse_cosine_pairs
 from ..operators.sampling import systematic_pps_sample
-from ..sources.files import load_table
+from ..sources.files import load_table, load_table_spread
 from .copurchase import copurchase_edges
 from .queries import register
 
@@ -95,7 +95,9 @@ def q_sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fixture: the 25 planted near-dup pairs score ≥ 0.80 and nothing
     else reaches 0.30 (measured gap at sf0.001/0.01) — wide margin, no
     boundary sensitivity."""
-    return sparse_cosine_pairs(load_table(spark, sf_dir, "documents"))
+    return sparse_cosine_pairs(
+        load_table_spread(spark, sf_dir, "documents", "doc_id")
+    )
 
 
 @register("setsim_prefix_filter_pairs", _EXACT_JACCARD_ORACLE)
@@ -108,7 +110,9 @@ def q_setsim_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     every qualifying pair; the verify step discards every false
     positive), unlike the banded-LSH twins whose recall argument leans
     on the fixture's similarity gap."""
-    return prefix_filter_near_dups(load_table(spark, sf_dir, "documents"))
+    return prefix_filter_near_dups(
+        load_table_spread(spark, sf_dir, "documents", "doc_id")
+    )
 
 
 _PPS_K = 40
@@ -238,7 +242,7 @@ def q_incremental_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.dedup import incremental_near_dup
 
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
     is_batch = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1).isin(
         "0", "1", "2"
     )
@@ -1005,7 +1009,7 @@ def q_dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFram
 
     from ..operators.dedup import connected_components, minhash_near_dups
 
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
     assign = connected_components(minhash_near_dups(docs, threshold=0.5))
     cs = assign.groupBy("cluster").agg(F.count(F.lit(1)).alias("sz"))
     h = cs.groupBy(F.col("sz").alias("cluster_size")).agg(
@@ -1072,7 +1076,7 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import connected_components, minhash_near_dups
     from ..operators.sampling import grouped_split
 
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
     assign = connected_components(minhash_near_dups(docs, threshold=0.5))
     keyed = (
         docs.select("doc_id")
@@ -1346,7 +1350,7 @@ def q_contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.dedup import connected_components, minhash_near_dups
 
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
     assign = connected_components(minhash_near_dups(docs, threshold=0.5))
     a2 = assign.select(
         F.col("node").alias("b_node"), F.col("cluster").alias("b_cluster")
@@ -1450,7 +1454,7 @@ def q_cross_source_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.dedup import minhash_near_dups
 
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
     pairs = minhash_near_dups(docs, threshold=0.5).select("doc_a", "doc_b")
     src = docs.select("doc_id", "source")
     j = pairs.join(

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..sources.files import load_table
+from ..sources.files import load_table, load_table_spread
 from .queries import register
 
 # 30-minute incident window for the range join, expressed once so the
@@ -768,7 +768,7 @@ def q_dedup_cluster_pointer_jumping(spark: SparkSession, sf_dir: str) -> DataFra
     path in tests/test_dedup_similarity.py)."""
     from ..operators.dedup import connected_components, minhash_near_dups
 
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
     pairs = minhash_near_dups(docs, threshold=0.5)
     return connected_components(pairs)
 

@@ -69,6 +69,24 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def load_table_spread(
+    spark: SparkSession, sf_dir: str, name: str, key: str
+) -> DataFrame:
+    """`load_table`, hash-repartitioned on `key` to the session's default
+    parallelism. Each synthetic table is ONE parquet file, and documents
+    holds one row group, so its scan is one task — and AQE coalesces the
+    sub-MB shuffles right after it back to one partition. Shingling and
+    MinHash cost per ROW, not per byte, so the plans that feed a
+    documents scan to them spread it first (measured at sf0.1: without
+    it ngram_jaccard_pairs and decontaminate_ngram_overlap ran 1.8×
+    slower). Lazy: a fixed partition count needs no partition probe,
+    so building the plan runs no job. Operators never repartition their
+    input themselves; where the rows come from is the plan's business."""
+    return load_table(spark, sf_dir, name).repartition(
+        spark.sparkContext.defaultParallelism, key
+    )
+
+
 def table_bytes(sf_dir: str, name: str) -> int:
     """On-disk size of one synthetic table (single parquet file or a
     directory of part files). Drives scale-adaptive batching decisions

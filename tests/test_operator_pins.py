@@ -20,13 +20,11 @@ PKG = "data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spa
 ALLOWED = {("similarity.py", "ivf_topk", "persist")}
 
 
-def _method_calls(path, methods):
-    """(file, enclosing top-level function, method) for every
-    `.<method>(...)` call in the module whose method is in `methods`."""
-    with open(path, encoding="utf-8") as fh:
-        tree = ast.parse(fh.read())
+def _method_calls(source, name, methods):
+    """(name, enclosing top-level function, method) for every
+    `.<method>(...)` call in `source` whose method is in `methods`."""
     found = []
-    for top in tree.body:
+    for top in ast.parse(source).body:
         for node in ast.walk(top):
             if (
                 isinstance(node, ast.Call)
@@ -34,14 +32,15 @@ def _method_calls(path, methods):
                 and node.func.attr in methods
             ):
                 owner = getattr(top, "name", "<module>")
-                found.append((os.path.basename(path), owner, node.func.attr))
+                found.append((name, owner, node.func.attr))
     return found
 
 
 def _operator_calls(methods):
     calls = []
     for path in sorted(glob.glob(os.path.join(REPO, PKG, "operators", "*.py"))):
-        calls += _method_calls(path, methods)
+        with open(path, encoding="utf-8") as fh:
+            calls += _method_calls(fh.read(), os.path.basename(path), methods)
     return calls
 
 
@@ -57,6 +56,8 @@ def test_operators_never_probe_partition_count():
     """No `getNumPartitions()` under operators/: the probe runs the
     input's shuffle stages at plan-build time and throws them away."""
     assert _operator_calls(("getNumPartitions",)) == []
-    # the scan is live: it finds the probe where a caller still makes one
-    probe = os.path.join(REPO, "tests", "test_python_datasource.py")
-    assert _method_calls(probe, ("getNumPartitions",))
+    # the scan is live: it finds the probe in a literal source
+    probe = "def f(df):\n    return df.rdd.getNumPartitions()\n"
+    assert _method_calls(probe, "probe.py", ("getNumPartitions",)) == [
+        ("probe.py", "f", "getNumPartitions")
+    ]

@@ -1695,10 +1695,9 @@ def test_dunn_pairs_broadcast_and_takeordered_free(spark):
 
 def test_semantic_dedup_pairs_join_on_cell(spark):
     """dedup_semantic_embedding's pairwise stage must stay keyed on
-    `cell` (candidates = Σ cell², never N²) — no cartesian, no
-    range join. Scoring and the component closure both run in the one
-    per-cell grouped stage, so the whole operator is a single lazy
-    plan."""
+    `cell` (candidates = Σ cell², never N²): scoring and the component
+    closure run in ONE grouped-pandas stage, fed by a hash exchange on
+    `cell` — no cartesian, no nested-loop join."""
     from data_streaming_udacity_p2_evaluate_human_balance_with_spark_streaming_spark.operators.dedup import (
         semantic_dedup,
     )
@@ -1715,6 +1714,10 @@ def test_semantic_dedup_pairs_join_on_cell(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+    groups = re.findall(r"FlatMapGroupsInPandas \[(\w+)#", plan)
+    assert groups == ["cell"], groups
+    exchanges = re.findall(r"Exchange hashpartitioning\((\w+)#", plan)
+    assert exchanges == ["cell"], exchanges
 
 
 def test_sequence_pack_single_exchange_per_shard(spark):
